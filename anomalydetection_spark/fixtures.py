@@ -299,36 +299,3 @@ def expected_violation_doc_ids(
         "nonmono": set(names[nonmono].tolist()),
         "incoherent": set(names[doc_idx[incoh]].tolist()),
     }
-
-
-def generate_loglines(n_lines: int = 2000, seed: int = 42) -> pd.DataFrame:
-    """Reference-parity log-line fixture (FIXTURES.md §4): ~70% start
-    with a timestamp, ~20% continuations, ~5% empty, ~5% duplicates —
-    drives the condense/dedup/conformance tests mirroring
-    /root/reference/log_parser.py:222-299."""
-    ids = np.arange(n_lines, dtype=np.int64)
-    uids = ids.astype(np.uint64)
-    u = _u01(uids, seed, 30)
-    h = _h(uids, seed, 31)
-    levels = np.array(["INFO", "WARN", "ERROR", "DEBUG"])
-    lvl = levels[(h % np.uint64(4)).astype(np.int64)]
-    minute = (ids // 10) % 60
-    ts = np.array(
-        [f"2024-03-0{1 + (i // 600) % 9} 12:{m:02d}:{i % 60:02d}" for i, m in zip(ids, minute)]
-    )
-    msg = np.char.add(
-        "request id=", (h % np.uint64(500)).astype("U6")
-    )
-    body = np.char.add(np.char.add(np.char.add(ts, " "), lvl), np.char.add(" ", msg))
-    cont = np.char.add("    at frame.", (h % np.uint64(50)).astype("U4"))
-    xml = np.char.add("<detail code=\"", np.char.add((h % np.uint64(9)).astype("U2"), "\"/>"))
-    value = np.where(
-        u < 0.70, body, np.where(u < 0.85, cont, np.where(u < 0.90, xml, ""))
-    ).astype(object)
-    # ~5% exact duplicates of the previous line
-    dup = (u >= 0.90) & (u < 0.95) & (ids > 0)
-    value = np.where(dup, np.roll(value, 1), value)
-    files = np.char.add("app", ((ids // (n_lines // 4 + 1))).astype("U2"))
-    return pd.DataFrame(
-        {"file": files.astype(object), "line_no": ids, "value": value}
-    )

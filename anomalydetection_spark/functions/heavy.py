@@ -109,7 +109,10 @@ def heavy_hitters(
         # row (candidate NULL): strict mode's N/(k+1) floor needs the
         # global N, and this pass already touches every row — emitting
         # it here fuses what was a separate full-scan count() (the r4
-        # driver bench's one regression) back into scan 1.
+        # driver bench's one regression) back into scan 1. The candidate
+        # column is object dtype: with the sentinel's None in it, pandas
+        # would otherwise widen int64 candidates to float64 and corrupt
+        # values above 2^53 before the Arrow cast back to the column type.
         ser = None
         n_part = 0
         for pdf in batches:
@@ -120,7 +123,7 @@ def heavy_hitters(
         cands = list(ser.index) if ser is not None else []
         yield pd.DataFrame(
             {
-                "candidate": cands + [None],
+                "candidate": pd.Series(cands + [None], dtype=object),
                 "n": [None] * len(cands) + [n_part],
             }
         )

@@ -217,6 +217,91 @@ def schema_diff(observed: T.StructType, contract: Contract) -> list[dict]:
     return issues
 
 
+def _value_predicates(rule):
+    """(rule name, predicate over a value Column) for each value rule a
+    ColumnRule or ElementRule declares. A NULL comparison is not a
+    violation (min/max over NULL is NULL, never counted or tagged)."""
+    allowed, rx = rule.allowed, rule.rlike
+    lo, hi = rule.min_value, rule.max_value
+    if not rule.nullable or rule.max_null_rate is not None:
+        yield "null", lambda v: v.isNull()
+    if allowed is not None:
+        yield "allowed", lambda v: v.isNotNull() & ~v.isin(*allowed)
+    if lo is not None:
+        yield "min_value", lambda v: v < F.lit(lo)
+    if hi is not None:
+        yield "max_value", lambda v: v > F.lit(hi)
+    if rx is not None:
+        yield "rlike", lambda v: v.isNotNull() & ~v.rlike(rx)
+
+
+def _on_field(pred, fld: str):
+    # single-parameter lambda: pyspark's higher-order-function bridge
+    # derives the SQL lambda arity from the Python signature, so the
+    # closure state comes from this factory, not from default args
+    return lambda s: pred(s[fld])
+
+
+def _rule_predicates(df: DataFrame, contract: Contract):
+    """Every data-tier rule of ``contract`` that compiles against
+    ``df``, in one fixed order → (label, rule, predicate, array column).
+
+    Row rules (columns, named expressions, JSON shape) yield a boolean
+    Column and ``None``; element rules yield a one-argument element
+    lambda and the name of the array column it ranges over. Rules on
+    absent columns, invalid element paths and non-string JSON columns
+    are skipped (they are structural findings); expressions are taken
+    as given — callers decide whether a bad one is a structural row or
+    an error."""
+    present = set(df.columns)
+    for c, rule in contract.columns.items():
+        if c in present:
+            for name, pred in _value_predicates(rule):
+                yield c, name, pred(F.col(c)), None
+    for name, er in contract.expressions.items():
+        falsy = ~F.coalesce(F.expr(er.expr), F.lit(False))
+        yield "*", f"expr:{name}", falsy, None
+    elem_ok, _ = _element_paths(df.schema, contract)
+    for path, er in contract.elements.items():
+        if path in elem_ok:
+            a, fld = elem_ok[path]
+            for name, pred in _value_predicates(er):
+                yield f"{a}[*].{fld}", name, _on_field(pred, fld), a
+    # JSON-shape rules: parse once per ruled column, then malformed /
+    # required-key / type-mix conditions; _norm_type/variant_path are
+    # shared with the json_field_audit operator so the type enum
+    # cannot drift
+    if contract.json:
+        from .semistructured import _norm_type, variant_path
+
+        for c in _json_valid_cols(df.schema, contract):
+            jr = contract.json[c]
+            col = F.col(c)
+            v = F.try_parse_json(col)
+            if jr.max_malformed_rate is not None:
+                yield c, "json_malformed", col.isNotNull() & v.isNull(), None
+            for k in jr.required:
+                yield (
+                    c,
+                    f"json_required:{k}",
+                    v.isNotNull()
+                    & F.variant_get(v, variant_path(k), "variant").isNull(),
+                    None,
+                )
+            for k, allowed_types in (jr.types or {}).items():
+                t = _norm_type(
+                    F.schema_of_variant(
+                        F.variant_get(v, variant_path(k), "variant")
+                    )
+                )
+                yield (
+                    c,
+                    f"json_type:{k}",
+                    t.isNotNull() & ~t.isin(*allowed_types),
+                    None,
+                )
+
+
 def contract_violation_counts(
     df: DataFrame,
     contract: Contract,
@@ -232,7 +317,6 @@ def contract_violation_counts(
     rows — and the output gains the segment columns in front. A
     thousand segments cost the same scan as one."""
     by = list(by) if by else []
-    present = set(df.columns)
     aggs = [F.count(F.lit(1)).cast("double").alias("__n")]
     # (column label, rule, violation agg alias, denominator agg alias).
     # Aliases are INDEXED (__v0, __v1, ...), never derived from column
@@ -242,126 +326,30 @@ def contract_violation_counts(
     # worse, rewrite — the verdict query. Labels only ever travel as
     # F.lit() values.
     keys: list[tuple[str, str, str, str]] = []
-
-    def add(c: str, rule: str, cond) -> None:
-        alias = f"__v{len(keys)}"
-        aggs.append(F.sum(F.when(cond, 1).otherwise(0)).alias(alias))
-        keys.append((c, rule, alias, "__n"))
-
-    for c, rule in contract.columns.items():
-        if c not in present:
-            continue
-        col = F.col(c)
-        if not rule.nullable or rule.max_null_rate is not None:
-            add(c, "null", col.isNull())
-        if rule.allowed is not None:
-            add(c, "allowed", col.isNotNull() & ~col.isin(*rule.allowed))
-        if rule.min_value is not None:
-            add(c, "min_value", col < F.lit(rule.min_value))
-        if rule.max_value is not None:
-            add(c, "max_value", col > F.lit(rule.max_value))
-        if rule.rlike is not None:
-            add(c, "rlike", col.isNotNull() & ~col.rlike(rule.rlike))
-
-    for name, er in contract.expressions.items():
-        # compiles into the SAME single agg pass; unevaluable
-        # expressions surface as schema:invalid_expression in
-        # contract_verdicts, not here
-        add("*", f"expr:{name}",
-            ~F.coalesce(F.expr(er.expr), F.lit(False)))
-
-    # element rules: size(filter(arr, ...)) counting — still the one
-    # agg pass, no explode; invalid paths are structural issues and
-    # skipped here
-    elem_ok, _ = _element_paths(df.schema, contract)
+    # element rules count violating ELEMENTS via size(filter(arr, ...))
+    # over the array column's total element count — still the one agg
+    # pass, no explode
     denoms: dict[str, str] = {}
-    for path, er in contract.elements.items():
-        if path not in elem_ok:
+    for label, rule, pred, arr in _rule_predicates(df, contract):
+        alias = f"__v{len(keys)}"
+        if arr is None:
+            aggs.append(F.sum(F.when(pred, 1).otherwise(0)).alias(alias))
+            keys.append((label, rule, alias, "__n"))
             continue
-        a, fld = elem_ok[path]
-        arr = F.col(a)
-        if a not in denoms:
-            alias = f"__e{len(denoms)}"
+        a = F.col(arr)
+        if arr not in denoms:
+            denoms[arr] = f"__e{len(denoms)}"
             aggs.append(
-                F.sum(
-                    F.when(arr.isNull(), 0).otherwise(F.size(arr))
-                ).cast("double").alias(alias)
+                F.sum(F.when(a.isNull(), 0).otherwise(F.size(a)))
+                .cast("double")
+                .alias(denoms[arr])
             )
-            denoms[a] = alias
-        label = f"{a}[*].{fld}"
-
-        def eadd(rule: str, cond) -> None:
-            alias = f"__v{len(keys)}"
-            aggs.append(
-                F.sum(
-                    F.when(arr.isNull(), 0).otherwise(
-                        F.size(F.filter(arr, cond))
-                    )
-                ).alias(alias)
-            )
-            keys.append((label, rule, alias, denoms[a]))
-
-        # single-parameter lambdas only: pyspark's higher-order-function
-        # bridge derives the SQL lambda arity from the Python signature,
-        # so closure state must come from factories, not default args
-        def _null(f):
-            return lambda s: s[f].isNull()
-
-        def _allowed(f, al):
-            return lambda s: s[f].isNotNull() & ~s[f].isin(*al)
-
-        def _min(f, v):
-            return lambda s: s[f] < F.lit(v)
-
-        def _max(f, v):
-            return lambda s: s[f] > F.lit(v)
-
-        def _rlike(f, rx):
-            return lambda s: s[f].isNotNull() & ~s[f].rlike(rx)
-
-        if not er.nullable or er.max_null_rate is not None:
-            eadd("null", _null(fld))
-        if er.allowed is not None:
-            eadd("allowed", _allowed(fld, er.allowed))
-        if er.min_value is not None:
-            eadd("min_value", _min(fld, er.min_value))
-        if er.max_value is not None:
-            eadd("max_value", _max(fld, er.max_value))
-        if er.rlike is not None:
-            eadd("rlike", _rlike(fld, er.rlike))
-
-    # JSON-shape rules: parse once per ruled column, then every
-    # malformed / required-key / type-mix check is a conditional count
-    # in the SAME agg. Non-string columns are skipped here (structural
-    # tier's problem); _norm_type/variant_path are shared with the
-    # json_field_audit operator so the type enum cannot drift.
-    if contract.json:
-        from .semistructured import _norm_type, variant_path
-
-        for c in _json_valid_cols(df.schema, contract):
-            jr = contract.json[c]
-            col = F.col(c)
-            v = F.try_parse_json(col)
-            if jr.max_malformed_rate is not None:
-                add(c, "json_malformed", col.isNotNull() & v.isNull())
-            for k in jr.required:
-                add(
-                    c,
-                    f"json_required:{k}",
-                    v.isNotNull()
-                    & F.variant_get(v, variant_path(k), "variant").isNull(),
-                )
-            for k, allowed_types in (jr.types or {}).items():
-                t = _norm_type(
-                    F.schema_of_variant(
-                        F.variant_get(v, variant_path(k), "variant")
-                    )
-                )
-                add(
-                    c,
-                    f"json_type:{k}",
-                    t.isNotNull() & ~t.isin(*allowed_types),
-                )
+        aggs.append(
+            F.sum(
+                F.when(a.isNull(), 0).otherwise(F.size(F.filter(a, pred)))
+            ).alias(alias)
+        )
+        keys.append((label, rule, alias, denoms[arr]))
 
     if not keys:
         # dtype-only contract: no data rules at all — stack(0, ...) is a
@@ -435,101 +423,16 @@ def annotate_violations(
     segmented path. Cost: entirely row-local — the tags column
     compiles into the projection; zero shuffles, zero extra scans.
     """
-    present = set(df.columns)
-    conds: list[tuple[str, object]] = []
-    for c, rule in contract.columns.items():
-        if c not in present:
-            continue
-        col = F.col(c)
-        if not rule.nullable or rule.max_null_rate is not None:
-            conds.append((f"{c}::null", col.isNull()))
-        if rule.allowed is not None:
-            conds.append(
-                (f"{c}::allowed", col.isNotNull() & ~col.isin(*rule.allowed))
-            )
-        if rule.min_value is not None:
-            conds.append((f"{c}::min_value", col < F.lit(rule.min_value)))
-        if rule.max_value is not None:
-            conds.append((f"{c}::max_value", col > F.lit(rule.max_value)))
-        if rule.rlike is not None:
-            conds.append(
-                (f"{c}::rlike", col.isNotNull() & ~col.rlike(rule.rlike))
-            )
-    for name, er in contract.expressions.items():
+    for er in contract.expressions.values():
         df.selectExpr(er.expr)  # loud on typos — no structural tier here
-        conds.append(
-            (f"*::expr:{name}", ~F.coalesce(F.expr(er.expr), F.lit(False)))
+    conds = [
+        (
+            f"{label}::{rule}",
+            pred if arr is None
+            else F.col(arr).isNotNull() & F.exists(F.col(arr), pred),
         )
-    elem_ok, _ = _element_paths(df.schema, contract)
-    for path, er in contract.elements.items():
-        if path not in elem_ok:
-            continue
-        a, fld = elem_ok[path]
-        arr = F.col(a)
-        label = f"{a}[*].{fld}"
-
-        def _null(f):
-            return lambda s: s[f].isNull()
-
-        def _allowed(f, al):
-            return lambda s: s[f].isNotNull() & ~s[f].isin(*al)
-
-        def _min(f, v):
-            return lambda s: s[f] < F.lit(v)
-
-        def _max(f, v):
-            return lambda s: s[f] > F.lit(v)
-
-        def _rlike(f, rx):
-            return lambda s: s[f].isNotNull() & ~s[f].rlike(rx)
-
-        def etag(rule: str, lam) -> None:
-            conds.append(
-                (f"{label}::{rule}", arr.isNotNull() & F.exists(arr, lam))
-            )
-
-        if not er.nullable or er.max_null_rate is not None:
-            etag("null", _null(fld))
-        if er.allowed is not None:
-            etag("allowed", _allowed(fld, er.allowed))
-        if er.min_value is not None:
-            etag("min_value", _min(fld, er.min_value))
-        if er.max_value is not None:
-            etag("max_value", _max(fld, er.max_value))
-        if er.rlike is not None:
-            etag("rlike", _rlike(fld, er.rlike))
-
-    # json rules: same VARIANT conditions as the counts path, tagged
-    # per row; non-string/absent columns are skipped (they're the
-    # structural tier's finding, and tags must never crash)
-    if contract.json:
-        from .semistructured import _norm_type, variant_path
-
-        for c in _json_valid_cols(df.schema, contract):
-            jr = contract.json[c]
-            col = F.col(c)
-            v = F.try_parse_json(col)
-            if jr.max_malformed_rate is not None:
-                conds.append(
-                    (f"{c}::json_malformed", col.isNotNull() & v.isNull())
-                )
-            for k in jr.required:
-                conds.append((
-                    f"{c}::json_required:{k}",
-                    v.isNotNull()
-                    & F.variant_get(v, variant_path(k), "variant").isNull(),
-                ))
-            for k, allowed_types in (jr.types or {}).items():
-                t = _norm_type(
-                    F.schema_of_variant(
-                        F.variant_get(v, variant_path(k), "variant")
-                    )
-                )
-                conds.append((
-                    f"{c}::json_type:{k}",
-                    t.isNotNull() & ~t.isin(*allowed_types),
-                ))
-
+        for label, rule, pred, arr in _rule_predicates(df, contract)
+    ]
     if not conds:
         return df.withColumn(out_col, F.array().cast("array<string>"))
     tags = F.array_sort(

@@ -2,9 +2,10 @@
 
 Engine generalization of the reference's metadata joins (J1-J4,
 /root/reference/database_manager.py:188-233): every non-null
-``spans.media_ref`` must exist in the media catalog; violating docs are
-emitted with their full original span sequence (span-sequence equality
-invariant) and per-partition pass/fail verdicts.
+``spans.media_ref`` must exist in the media catalog. This module finds
+the orphans; the pipeline's wide scan (plans/pipeline.py) emits the
+violating docs with their full original span sequence (span-sequence
+equality invariant) and judges per-partition pass/fail.
 
 Scale design:
 1. ``explode`` spans → distinct (doc, ref) pairs. Distinct-by-ref first:
@@ -262,46 +263,3 @@ def orphan_refs(
         ["row_fp"] if row_fingerprint else []
     )
     return out.dropDuplicates(dedup_cols)
-
-
-def referential_violations(
-    docs: DataFrame,
-    catalog: DataFrame,
-    spark: SparkSession | None = None,
-    **kwargs,
-) -> DataFrame:
-    """Violation rows: original doc rows (full span sequence) + the
-    orphan ref(s) that failed, one row per (doc, orphan ref)."""
-    orphans = orphan_refs(docs, catalog, spark, **kwargs)
-    per_doc = orphans.groupBy("doc_id").agg(
-        F.sort_array(F.collect_set("media_ref")).alias("orphan_refs")
-    )
-    return docs.join(per_doc, "doc_id", "inner").select(
-        "doc_id", "partition_id", "spans", "orphan_refs"
-    )
-
-
-def referential_verdicts(
-    docs: DataFrame,
-    catalog: DataFrame,
-    spark: SparkSession | None = None,
-    **kwargs,
-) -> DataFrame:
-    orphans = orphan_refs(docs, catalog, spark, **kwargs)
-    per_part = orphans.groupBy("partition_id").agg(
-        F.count("*").alias("n_violations")
-    )
-    totals = docs.groupBy("partition_id").agg(F.count("*").alias("n_rows"))
-    return totals.join(per_part, "partition_id", "left").select(
-        F.lit("referential").alias("check"),
-        F.col("partition_id").cast("int"),
-        "n_rows",
-        F.coalesce("n_violations", F.lit(0)).alias("n_violations"),
-        (F.coalesce("n_violations", F.lit(0)) / F.col("n_rows")).alias(
-            "violation_rate"
-        ),
-        F.coalesce("n_violations", F.lit(0)).cast("double").alias("score"),
-        F.when(F.coalesce("n_violations", F.lit(0)) > 0, "fail")
-        .otherwise("pass")
-        .alias("verdict"),
-    )

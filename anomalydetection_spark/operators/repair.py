@@ -61,8 +61,9 @@ class RepairRule:
 
 
 def _qcol(c: str):
-    """Column ref safe for names with spaces/dots/hyphens/keywords."""
-    return F.col("`" + c + "`")
+    """Column ref safe for names with spaces/dots/hyphens/keywords and
+    backticks (an embedded backtick is escaped by doubling it)."""
+    return F.col("`" + c.replace("`", "``") + "`")
 
 
 def plan_repairs(
@@ -101,12 +102,9 @@ def plan_repairs(
             F.sum(_qcol(c).isNull().cast("long")).alias(f"__null_{c}")
         )
     for c in numeric:
-        # backtick-quoted: raw interpolation fails to parse (or binds
-        # wrong) for names with spaces/dots/reserved words, all
-        # reachable via --repair-columns
-        aggs.append(
-            F.expr(f"percentile(`{c}`, 0.5)").alias(f"__med_{c}")
-        )
+        # a Column, not SQL text: column names reachable via
+        # --repair-columns may hold any character
+        aggs.append(F.percentile(_qcol(c), 0.5).alias(f"__med_{c}"))
     row = df.agg(*aggs).collect()[0].asDict()
 
     # mode per categorical column: MG-capped candidates from ONE pass

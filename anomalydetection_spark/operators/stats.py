@@ -23,7 +23,7 @@ Stats computed (SURVEY.md §2.2 F1-F6 analogs):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 MONOTONE_EXPR = (
@@ -45,60 +45,48 @@ def incoherent_span_filter(s):
     )
 
 
-def doc_conformance(docs: DataFrame) -> DataFrame:
-    """Per-doc conformance flags — one narrow projection, no shuffle."""
-    return docs.select(
-        "doc_id",
-        "partition_id",
-        F.col("spans").isNull().alias("null_spans"),
-        (F.col("spans").isNotNull() & (F.size("spans") == 0)).alias("empty_spans"),
-        F.when(
-            F.col("spans").isNull(), F.lit(False)
-        ).otherwise(~F.expr(MONOTONE_EXPR)).alias("nonmonotone_offsets"),
-        F.coalesce(
-            F.size(F.filter("spans", lambda s: s["kind"].isNull())), F.lit(0)
-        ).alias("n_null_kind"),
-        F.coalesce(
-            F.size(F.filter("spans", incoherent_span_filter)), F.lit(0)
-        ).alias("n_incoherent"),
-        F.coalesce(F.size("spans"), F.lit(0)).alias("n_spans"),
+def null_spans_flag() -> Column:
+    return F.col("spans").isNull()
+
+
+def empty_spans_flag() -> Column:
+    return F.col("spans").isNotNull() & (F.size("spans") == 0)
+
+
+def nonmonotone_flag() -> Column:
+    return F.when(F.col("spans").isNull(), F.lit(False)).otherwise(
+        ~F.expr(MONOTONE_EXPR)
     )
+
+
+def null_kind_flag() -> Column:
+    return F.coalesce(
+        F.size(F.filter("spans", lambda s: s["kind"].isNull())), F.lit(0)
+    ) > 0
+
+
+def incoherent_flag() -> Column:
+    return F.coalesce(
+        F.size(F.filter("spans", incoherent_span_filter)), F.lit(0)
+    ) > 0
 
 
 def partition_stats(docs: DataFrame) -> DataFrame:
-    """Per-partition column stats (one shuffle, partial-agg combined)."""
-    c = doc_conformance(docs)
-    return c.groupBy("partition_id").agg(
+    """Per-partition column stats (one shuffle, partial-agg combined):
+    row and span counts, the number of docs raising each conformance
+    flag of the pipeline's check table (one column per check name),
+    and a doc_id HLL sketch."""
+    from ..plans.pipeline import CHECKS
+
+    return docs.groupBy("partition_id").agg(
         F.count("*").alias("n_rows"),
-        F.sum(F.col("null_spans").cast("long")).alias("n_null_spans"),
-        F.sum(F.col("empty_spans").cast("long")).alias("n_empty_spans"),
-        F.sum(F.col("nonmonotone_offsets").cast("long")).alias("n_nonmonotone"),
-        F.sum("n_null_kind").alias("n_null_kind"),
-        F.sum("n_incoherent").alias("n_incoherent"),
-        F.sum("n_spans").alias("n_spans"),
+        *[
+            F.sum(c.flag().cast("long")).alias(c.name)
+            for c in CHECKS
+            if c.flag is not None
+        ],
+        F.sum(F.coalesce(F.size("spans"), F.lit(0))).alias("n_spans"),
         F.expr("hll_sketch_agg(doc_id)").alias("doc_id_hll"),
-    )
-
-
-def span_kind_stats(docs: DataFrame) -> DataFrame:
-    """Per (partition, kind): counts, text-length stats, media distinct."""
-    s = docs.select(
-        "partition_id", F.explode("spans").alias("s")
-    ).select(
-        "partition_id",
-        F.coalesce(F.col("s.kind"), F.lit("__null__")).alias("kind"),
-        F.length(F.coalesce(F.col("s.text"), F.lit(""))).alias("text_len"),
-        F.col("s.media_ref").alias("media_ref"),
-    )
-    return s.groupBy("partition_id", "kind").agg(
-        F.count("*").alias("n_spans"),
-        F.avg("text_len").alias("avg_text_len"),
-        F.min("text_len").alias("min_text_len"),
-        F.max("text_len").alias("max_text_len"),
-        F.percentile_approx("text_len", [0.5, 0.9, 0.99], 10000).alias(
-            "len_quantiles"
-        ),
-        F.expr("hll_sketch_agg(media_ref)").alias("media_ref_hll"),
     )
 
 
@@ -139,71 +127,6 @@ def kind_histogram(docs: DataFrame, by_partition: bool = False) -> DataFrame:
         )
         .groupBy(*keys)
         .agg(F.count("*").alias("count"))
-    )
-
-
-def conformance_verdicts(
-    docs: DataFrame,
-    max_null_rate: float = 0.01,
-    max_type_error_rate: float = 0.01,
-) -> DataFrame:
-    """Per-partition verdict rows for null-rate + offset-monotonicity
-    conformance (VERDICTS_SCHEMA shape, one row per check)."""
-    ps = partition_stats(docs).cache()
-    checks = [
-        ("null_spans", "n_null_spans", max_null_rate),
-        ("empty_spans", "n_empty_spans", max_null_rate),
-        ("offset_monotonicity", "n_nonmonotone", max_type_error_rate),
-        ("null_span_kind", "n_null_kind", max_type_error_rate),
-        ("span_coherence", "n_incoherent", max_type_error_rate),
-    ]
-    out = None
-    for name, colname, thresh in checks:
-        v = ps.select(
-            F.lit(name).alias("check"),
-            F.col("partition_id").cast("int"),
-            "n_rows",
-            F.col(colname).alias("n_violations"),
-            (F.col(colname) / F.col("n_rows")).alias("violation_rate"),
-            (F.col(colname) / F.col("n_rows")).alias("score"),
-            F.when(F.col(colname) / F.col("n_rows") > thresh, "fail")
-            .otherwise("pass")
-            .alias("verdict"),
-        )
-        out = v if out is None else out.unionByName(v)
-    return out
-
-
-def conformance_violations(docs: DataFrame) -> DataFrame:
-    """Exact violating doc rows for the conformance checks, with the
-    original span sequence verbatim (span-sequence equality invariant).
-
-    Flags are row-local → computed inline, no join (a self-join on
-    doc_id would fan out across planted duplicate ids)."""
-    null_spans = F.col("spans").isNull()
-    empty_spans = F.col("spans").isNotNull() & (F.size("spans") == 0)
-    nonmono = F.when(null_spans, F.lit(False)).otherwise(~F.expr(MONOTONE_EXPR))
-    n_null_kind = F.coalesce(
-        F.size(F.filter("spans", lambda s: s["kind"].isNull())), F.lit(0)
-    )
-    n_incoherent = F.coalesce(
-        F.size(F.filter("spans", incoherent_span_filter)), F.lit(0)
-    )
-    return (
-        docs.select(
-            "doc_id",
-            "partition_id",
-            "spans",
-            F.concat_ws(
-                ",",
-                F.when(null_spans, "null_spans"),
-                F.when(empty_spans, "empty_spans"),
-                F.when(nonmono, "nonmonotone_offsets"),
-                F.when(n_null_kind > 0, "null_span_kind"),
-                F.when(n_incoherent > 0, "span_coherence"),
-            ).alias("detail"),
-        )
-        .filter(F.col("detail") != "")
     )
 
 

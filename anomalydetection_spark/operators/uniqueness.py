@@ -13,7 +13,9 @@ on ``(key, salt)`` where salt is derived from the executor partition,
 then re-aggregating on ``key``; the hot key's partial counts then
 arrive at the final reducer as ≤ ``salt_buckets`` rows instead of
 millions. Violation rows are recovered by joining the (small) dup-key
-set back to the table — broadcast when it fits, AQE otherwise.
+set back to the table inside the pipeline's wide scan
+(plans/pipeline.py::_all_violations) — broadcast when it fits, AQE
+otherwise.
 """
 
 from __future__ import annotations
@@ -49,72 +51,4 @@ def duplicate_keys(
         .groupBy(*cols)
         .agg(F.count("*").alias("dup_cnt"))
         .filter(F.col("dup_cnt") > 1)
-    )
-
-
-def uniqueness_violations(
-    df: DataFrame,
-    key="doc_id",
-    salt_buckets: int = 16,
-    broadcast_dups: bool = True,
-    key_scope: DataFrame | None = None,
-) -> DataFrame:
-    """Full violation rows for duplicated keys (original columns + dup_cnt).
-
-    The dup-key set is usually tiny relative to the table → broadcast it
-    for a shuffle-free probe of the big side. With ``broadcast_dups=False``
-    AQE picks the strategy (use when dup rate is pathological).
-
-    ``key_scope``: frame to detect duplicate keys over (defaults to
-    ``df``). Incremental runs pass the FULL table here while ``df`` is
-    only the pending partitions — a duplicate pair straddling a
-    validated and a pending partition is still caught (the key-only
-    scan over the full table is one narrow column; violation rows are
-    attributed only within ``df``).
-    """
-    dups = duplicate_keys(key_scope if key_scope is not None else df, key, salt_buckets)
-    if broadcast_dups:
-        dups = F.broadcast(dups)
-    return df.join(dups, _keys(key), "inner")
-
-
-def uniqueness_verdicts(
-    df: DataFrame,
-    key="doc_id",
-    partition_col: str = "partition_id",
-    salt_buckets: int = 16,
-    key_scope: DataFrame | None = None,
-) -> DataFrame:
-    """Per-partition pass/fail for the uniqueness check.
-
-    A duplicate pair may straddle partitions; every partition containing
-    at least one row of a duplicated key fails (matches the reference's
-    per-file verdict granularity: the file containing the anomalous line
-    gets the anomaly, /root/reference/model_manager.py:200-228).
-
-    ``key_scope`` (see ``uniqueness_violations``): detect dup keys over
-    the full table even when ``df`` is an incremental slice.
-    """
-    dups = F.broadcast(
-        duplicate_keys(key_scope if key_scope is not None else df, key, salt_buckets)
-    )
-    per_part = df.join(dups, _keys(key), "inner").groupBy(partition_col).agg(
-        F.count("*").alias("n_violations")
-    )
-    totals = df.groupBy(partition_col).agg(F.count("*").alias("n_rows"))
-    return (
-        totals.join(per_part, partition_col, "left")
-        .select(
-            F.lit("uniqueness").alias("check"),
-            F.col(partition_col).cast("int").alias("partition_id"),
-            "n_rows",
-            F.coalesce("n_violations", F.lit(0)).alias("n_violations"),
-            (F.coalesce("n_violations", F.lit(0)) / F.col("n_rows")).alias(
-                "violation_rate"
-            ),
-            F.coalesce("n_violations", F.lit(0)).cast("double").alias("score"),
-            F.when(F.coalesce("n_violations", F.lit(0)) > 0, "fail")
-            .otherwise("pass")
-            .alias("verdict"),
-        )
     )

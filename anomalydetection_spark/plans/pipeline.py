@@ -30,8 +30,9 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
+from typing import Callable, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, ValidationConfig
@@ -42,56 +43,56 @@ from ..operators.uniqueness import duplicate_keys
 from ..operators.verdict import global_verdict
 from ..sources.manifest import Manifest, partition_snapshots
 
-CONF_CHECKS = (
-    "null_spans", "empty_spans", "offset_monotonicity", "null_span_kind",
-    "span_coherence",
+class Check(NamedTuple):
+    """One validation check: its verdict name, the violation-row
+    family (the ``check`` value of its violation rows), the
+    ValidationConfig rate gate it is judged by, and — for the
+    row-local conformance checks — a factory for its boolean flag
+    Column. Conformance rows name every raised flag in their comma
+    ``detail``; uniqueness and referential rows come from keyed side
+    inputs (the dup-key set, catalog membership)."""
+
+    name: str
+    family: str
+    gate: str
+    flag: Callable[[], Column] | None = None
+
+
+# THE check table: every verdict, violation family, gate, capped count
+# and pre-flight estimate derives from it, in this order.
+CHECKS = (
+    Check("uniqueness", "uniqueness", "max_dup_rate"),
+    Check("null_spans", "conformance", "max_null_rate",
+          stats_ops.null_spans_flag),
+    Check("empty_spans", "conformance", "max_null_rate",
+          stats_ops.empty_spans_flag),
+    Check("offset_monotonicity", "conformance", "max_type_error_rate",
+          stats_ops.nonmonotone_flag),
+    Check("null_span_kind", "conformance", "max_type_error_rate",
+          stats_ops.null_kind_flag),
+    Check("span_coherence", "conformance", "max_type_error_rate",
+          stats_ops.incoherent_flag),
+    Check("referential", "referential", "max_orphan_rate"),
 )
 
 
-def conformance_exprs():
-    """The five row-local conformance expressions — the ONE place the
-    check definitions live. Returns (flags, n_null_kind, n_incoherent):
-    ``flags`` maps every CONF_CHECKS name to its boolean Column (in
-    CONF_CHECKS order); the two counts are exposed separately because
-    the violation rows report them in their detail strings. Shared by
-    the full pass (_all_violations) and the sampled pre-flight
-    (preflight_estimate) so a tightened definition cannot make the
-    pre-flight disagree with the pass it predicts."""
-    null_spans = F.col("spans").isNull()
-    empty_spans = F.col("spans").isNotNull() & (F.size("spans") == 0)
-    nonmono = F.when(null_spans, F.lit(False)).otherwise(
-        ~F.expr(stats_ops.MONOTONE_EXPR)
-    )
-    n_null_kind = F.coalesce(
-        F.size(F.filter("spans", lambda s: s["kind"].isNull())), F.lit(0)
-    )
-    n_incoherent = F.coalesce(
-        F.size(F.filter("spans", stats_ops.incoherent_span_filter)),
-        F.lit(0),
-    )
-    flags = {
-        "null_spans": null_spans,
-        "empty_spans": empty_spans,
-        "offset_monotonicity": nonmono,
-        "null_span_kind": n_null_kind > 0,
-        "span_coherence": n_incoherent > 0,
-    }
-    return flags, n_null_kind, n_incoherent
+def active_checks(has_catalog: bool) -> list[Check]:
+    """The checks a pass judges: referential needs a catalog."""
+    return [c for c in CHECKS if has_catalog or c.family != "referential"]
 
 
-def check_gates(cfg) -> dict:
-    """check name → configured rate gate — shared by the full pass's
-    verdicts (_grid_to_verdicts) and the sampled pre-flight, so the
-    two can never gate the same check differently."""
-    return {
-        "uniqueness": cfg.max_dup_rate,
-        "referential": cfg.max_orphan_rate,
-        "null_spans": cfg.max_null_rate,
-        "empty_spans": cfg.max_null_rate,
-        "offset_monotonicity": cfg.max_type_error_rate,
-        "null_span_kind": cfg.max_type_error_rate,
-        "span_coherence": cfg.max_type_error_rate,
-    }
+def _check_hits() -> list[tuple[str, Column]]:
+    """(check name, 0/1 Column): whether a violation row counts toward
+    the check — its family matches and, for conformance, the check's
+    name is in the row's detail. Summed per partition (plain or over
+    the capping window) these are the verdict counts."""
+    out = []
+    for c in CHECKS:
+        hit = F.col("check") == c.family
+        if c.flag is not None:
+            hit = hit & F.col("detail").contains(c.name)
+        out.append((c.name, F.when(hit, 1).otherwise(0)))
+    return out
 
 
 @dataclass
@@ -143,14 +144,6 @@ def _all_violations(
       (``broadcast_orphans``).
 
     Each violating doc emits one row per failed check, spans verbatim."""
-    flags, n_null_kind, n_incoherent = conformance_exprs()
-    conf_detail = F.concat_ws(
-        ",", *[F.when(expr, name) for name, expr in flags.items()]
-    )
-    null_spans = flags["null_spans"]
-    empty_spans = flags["empty_spans"]
-    nonmono = flags["offset_monotonicity"]
-
     dups_b = F.broadcast(dups) if broadcast_dups else dups
     # attach on the CONFIGURED uniqueness key — duplicate_keys returns
     # (key..., dup_cnt), so the join columns must mirror cfg.unique_key
@@ -191,35 +184,40 @@ def _all_violations(
             "n_orphans", F.lit(None).cast("long")
         ).withColumn("orphan_refs", F.lit(None).cast("array<string>"))
 
-    check_struct = "struct<check:string,detail:string,score:double>"
-    checks_arr = F.array(
-        F.when(
-            F.col("dup_cnt").isNotNull(),
-            F.struct(
-                F.lit("uniqueness").alias("check"),
-                F.concat(F.lit("dup_cnt="), F.col("dup_cnt")).alias("detail"),
-                F.col("dup_cnt").cast("double").alias("score"),
-            ),
-        ).cast(check_struct),
-        F.when(
-            conf_detail != "",
-            F.struct(
-                F.lit("conformance").alias("check"),
-                conf_detail.alias("detail"),
-                F.lit(1.0).alias("score"),
-            ),
-        ).cast(check_struct),
-        F.when(
-            F.col("n_orphans").isNotNull(),
-            F.struct(
-                F.lit("referential").alias("check"),
-                F.concat(
-                    F.lit("orphan_refs="), F.concat_ws(",", "orphan_refs")
-                ).alias("detail"),
-                F.col("n_orphans").cast("double").alias("score"),
-            ),
-        ).cast(check_struct),
+    conf_detail = F.concat_ws(
+        ",", *[F.when(c.flag(), c.name) for c in CHECKS if c.flag is not None]
     )
+    # violation-row family → (raised, detail, score)
+    rows = {
+        "uniqueness": (
+            F.col("dup_cnt").isNotNull(),
+            F.concat(F.lit("dup_cnt="), F.col("dup_cnt")),
+            F.col("dup_cnt").cast("double"),
+        ),
+        "conformance": (conf_detail != "", conf_detail, F.lit(1.0)),
+        "referential": (
+            F.col("n_orphans").isNotNull(),
+            F.concat(
+                F.lit("orphan_refs="), F.concat_ws(",", "orphan_refs")
+            ),
+            F.col("n_orphans").cast("double"),
+        ),
+    }
+    check_struct = "struct<check:string,detail:string,score:double>"
+    raised_checks = []
+    for family in dict.fromkeys(c.family for c in CHECKS):
+        raised, detail, score = rows[family]
+        raised_checks.append(
+            F.when(
+                raised,
+                F.struct(
+                    F.lit(family).alias("check"),
+                    detail.alias("detail"),
+                    score.alias("score"),
+                ),
+            ).cast(check_struct)
+        )
+    checks_arr = F.array(*raised_checks)
     return (
         flagged.select(
             "doc_id",
@@ -253,24 +251,8 @@ def _verdicts_from_violations(
     any dup/orphan fails — max_dup_rate/max_orphan_rate 0 — while
     conformance tolerates up to max_null_rate/max_type_error_rate;
     exact violation rows are emitted regardless)."""
-    conf_counts = [
-        F.sum(
-            F.when(
-                (F.col("check") == "conformance")
-                & F.col("detail").contains(name),
-                1,
-            ).otherwise(0)
-        ).alias(name)
-        for name in CONF_CHECKS
-    ]
     per_part = violations.groupBy("partition_id").agg(
-        F.sum(F.when(F.col("check") == "uniqueness", 1).otherwise(0)).alias(
-            "uniqueness"
-        ),
-        F.sum(F.when(F.col("check") == "referential", 1).otherwise(0)).alias(
-            "referential"
-        ),
-        *conf_counts,
+        *[F.sum(hit).alias(name) for name, hit in _check_hits()]
     )
     return _grid_to_verdicts(per_part, totals, has_catalog, cfg)
 
@@ -287,24 +269,21 @@ def _grid_to_verdicts(
     with stack() instead of a per-check union (a 7-branch union re-ran
     the violations groupBy once per branch — 7x the work for identical
     output; measured 7.9s -> ~1s of the local[32] 16M pass)."""
-    rate_gates = check_gates(cfg)
-    check_names = ["uniqueness", *CONF_CHECKS] + (
-        ["referential"] if has_catalog else []
-    )
+    checks = active_checks(has_catalog)
     grid = totals.join(per_part, "partition_id", "left")
     stack_args = []
-    for name in check_names:
+    for c in checks:
         stack_args += [
-            F.lit(name),
-            F.coalesce(F.col(name), F.lit(0)).cast("long"),
-            F.lit(float(rate_gates[name])),
+            F.lit(c.name),
+            F.coalesce(F.col(c.name), F.lit(0)).cast("long"),
+            F.lit(float(getattr(cfg, c.gate))),
         ]
     rate = F.col("n_violations") / F.col("n_rows")
     return (
         grid.select(
             F.col("partition_id").cast("int"),
             "n_rows",
-            F.stack(F.lit(len(check_names)), *stack_args).alias(
+            F.stack(F.lit(len(checks)), *stack_args).alias(
                 "check", "n_violations", "gate"
             ),
         )
@@ -322,14 +301,14 @@ def _grid_to_verdicts(
     )
 
 
-_CAP_HELPER_COLS = ["__n_in_group"] + [f"__cnt_{n}" for n in CONF_CHECKS]
+_CAP_HELPER_COLS = [f"__cnt_{c.name}" for c in CHECKS]
 
 
 def _cap_violations(violations: DataFrame, k: int) -> DataFrame:
     """Exemplar-capped violation stream: at most ``k`` rows per
-    (check, partition), each carrying the EXACT group counts as window
-    aggregates (``__n_in_group`` + per-conformance-name ``__cnt_*``)
-    so verdicts stay exact without a second pass over the stream.
+    (check, partition), each carrying the EXACT per-check counts of its
+    group as window aggregates (``__cnt_<check>``) so verdicts stay
+    exact without a second pass over the stream.
 
     Cost model: ONE shuffle of the violation stream (violation-rate ×
     table, i.e. the thing this cap exists to shrink on the way to the
@@ -341,18 +320,9 @@ def _cap_violations(violations: DataFrame, k: int) -> DataFrame:
     w = Window.partitionBy("check", "partition_id")
     out = violations.withColumn(
         "__rn", F.row_number().over(w.orderBy("doc_id", "detail"))
-    ).withColumn("__n_in_group", F.count(F.lit(1)).over(w))
-    for name in CONF_CHECKS:
-        out = out.withColumn(
-            f"__cnt_{name}",
-            F.sum(
-                F.when(
-                    (F.col("check") == "conformance")
-                    & F.col("detail").contains(name),
-                    1,
-                ).otherwise(0)
-            ).over(w),
-        )
+    )
+    for name, hit in _check_hits():
+        out = out.withColumn(f"__cnt_{name}", F.sum(hit).over(w))
     return out.filter(F.col("__rn") <= k).drop("__rn")
 
 
@@ -364,20 +334,12 @@ def _verdicts_from_capped(
 ) -> DataFrame:
     """Per-partition verdicts from an exemplar-capped violation stream:
     counts come from the window aggregates stamped on the exemplar rows
-    by ``_cap_violations`` (max over the group constant), not from
-    counting rows — row counts are capped, the stamped counts are not."""
-    aggs = [
-        F.max(
-            F.when(F.col("check") == name, F.col("__n_in_group"))
-        ).alias(name)
-        for name in ("uniqueness", "referential")
-    ] + [
-        F.max(
-            F.when(F.col("check") == "conformance", F.col(f"__cnt_{name}"))
-        ).alias(name)
-        for name in CONF_CHECKS
-    ]
-    per_part = capped.groupBy("partition_id").agg(*aggs)
+    by ``_cap_violations`` (a group's count is constant on its rows and
+    0 on every other group's), not from counting rows — row counts are
+    capped, the stamped counts are not."""
+    per_part = capped.groupBy("partition_id").agg(
+        *[F.max(f"__cnt_{c.name}").alias(c.name) for c in CHECKS]
+    )
     return _grid_to_verdicts(per_part, totals, has_catalog, cfg)
 
 
@@ -913,10 +875,10 @@ def preflight_estimate(
         sample = docs.filter(F.col("partition_id").isin(chosen))
     else:
         sample = docs.sample(fraction=fraction, seed=seed)
-    flags, _, _ = conformance_exprs()
-    proj = [v.cast("long").alias(k) for k, v in flags.items()]
-    ref_joined = None
-    ref_in_agg = False
+    checks = active_checks(catalog is not None)
+    # check name → row-local flag summed in the grid agg
+    flags = {c.name: c.flag() for c in checks if c.flag is not None}
+    ref_joined = {}
     if catalog is not None:
         from ..operators.referential import (
             BROADCAST_MAX_CATALOG_ROWS,
@@ -932,12 +894,7 @@ def preflight_estimate(
         )
         if n_cat <= BROADCAST_MAX_CATALOG_ROWS:
             udf = orphan_refs_rowlocal_udf(spark, collect_catalog_keys(catalog))
-            proj.append(
-                (F.size(udf(span_refs_column())) > 0)
-                .cast("long")
-                .alias("referential")
-            )
-            ref_in_agg = True
+            flags["referential"] = F.size(udf(span_refs_column())) > 0
         else:
             # catalog beyond broadcast: the salted anti-join runs on the
             # SAMPLE's exploded refs only — fraction x the full cost
@@ -957,21 +914,21 @@ def preflight_estimate(
                 .agg(F.count("*").alias("n"))
                 .collect()
             }
-    check_cols = list(flags) + (["referential"] if ref_in_agg else [])
     # per-partition grid either way (metadata scale): rows mode sums it
     # globally, partitions mode needs the per-cluster counts for the CI
     grid = (
-        sample.select("partition_id", *proj)
+        sample.select(
+            "partition_id",
+            *[v.cast("long").alias(k) for k, v in flags.items()],
+        )
         .groupBy("partition_id")
         .agg(
             F.count("*").alias("__n"),
-            *[F.sum(k).alias(k) for k in check_cols],
+            *[F.sum(k).alias(k) for k in flags],
         )
         .collect()
     )
     n_sample = sum(int(r["__n"]) for r in grid)
-
-    gates = check_gates(cfg)
 
     def _wilson(x: int, n: int) -> tuple[float, float]:
         if n == 0:
@@ -1037,37 +994,27 @@ def preflight_estimate(
         return (max(0.0, p - half), min(1.0, p + half))
 
     rows = []
-    exact_rate = n_dup_docs / n_total if n_total else 0.0
-    rows.append(
-        (
-            "uniqueness",
-            "exact",
-            n_total,
-            n_dup_docs,
-            exact_rate,
-            exact_rate,
-            exact_rate,
-            gates["uniqueness"],
-            "fail" if exact_rate > gates["uniqueness"] else "pass",
-        )
-    )
-    per_check: dict[str, tuple[list[int], list[int]]] = {}
     ns = [int(r["__n"]) for r in grid]
-    for name in check_cols:
-        per_check[name] = ([int(r[name] or 0) for r in grid], ns)
-    if catalog is not None and not ref_in_agg:
-        per_check["referential"] = (
-            [int(ref_joined.get(r["partition_id"], 0)) for r in grid],
-            ns,
-        )
     tier = "sampled" if mode == "rows" else "sampled_partitions"
-    for name, (xs, ns_) in per_check.items():
+    for c in checks:
+        gate = getattr(cfg, c.gate)
+        if c.family == "uniqueness":
+            rate = n_dup_docs / n_total if n_total else 0.0
+            rows.append((
+                c.name, "exact", n_total, n_dup_docs, rate, rate, rate,
+                gate, "fail" if rate > gate else "pass",
+            ))
+            continue
+        xs = [
+            int(r[c.name] or 0) if c.name in flags
+            else int(ref_joined.get(r["partition_id"], 0))
+            for r in grid
+        ]
         x = sum(xs)
         if mode == "rows":
             lo, hi = _wilson(x, n_sample)
         else:
-            lo, hi = _cluster_ci(xs, ns_)
-        gate = gates[name]
+            lo, hi = _cluster_ci(xs, ns)
         if x > 0 and gate == 0.0:
             verdict = "fail"       # sample ⊆ table: sighting is proof
         elif lo > gate:
@@ -1076,19 +1023,10 @@ def preflight_estimate(
             verdict = "pass"
         else:
             verdict = "inconclusive"
-        rows.append(
-            (
-                name,
-                tier,
-                n_sample,
-                x,
-                (x / n_sample) if n_sample else 0.0,
-                lo,
-                hi,
-                gate,
-                verdict,
-            )
-        )
+        rows.append((
+            c.name, tier, n_sample, x,
+            (x / n_sample) if n_sample else 0.0, lo, hi, gate, verdict,
+        ))
     return spark.createDataFrame(
         rows,
         schema=(

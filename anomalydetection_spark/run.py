@@ -655,9 +655,8 @@ def stream_round(spark, args) -> dict:
         if args.baseline_hist
         else None
     )
-    # the per-batch drift histogram must bin exactly like the stored
-    # baseline — honor a --config drift section the same way the batch
-    # pass does
+    # gates, key, binning and drift thresholds: honor --config the same
+    # way the batch pass does
     from .config import DEFAULT_CONFIG
 
     cfg = DEFAULT_CONFIG
@@ -682,8 +681,7 @@ def stream_round(spark, args) -> dict:
         baseline_hist=baseline,
         emit_violations=args.stream_violations,
         max_violation_exemplars=args.max_violation_exemplars,
-        histogram_bins=cfg.drift.histogram_bins,
-        histogram_bin_width=cfg.drift.histogram_bin_width,
+        cfg=cfg,
     )
     q.awaitTermination()
     verdicts_dir = os.path.join(out_dir, "verdicts")

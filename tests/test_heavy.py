@@ -98,3 +98,22 @@ def test_heavy_hitters_flat_distribution_still_exact(spark):
     # ties broken by value asc -> the 10 alphabetically-first values
     assert [r.value for r in got] == [f"v{i:03d}" for i in range(10)]
     assert all(r["count"] == 5 for r in got)
+
+
+def test_heavy_hitters_exact_above_2_pow_53(spark):
+    """int64 candidates above 2^53 round-trip the Misra-Gries pass
+    exactly: the bounded path finds the dominant value itself (strict
+    mode certifies it without falling back, the unchecked mode returns
+    it) instead of a float64-rounded neighbour."""
+    import warnings
+
+    big = 2**53 + 1
+    rows = [(big,)] * 50 + [(v,) for v in range(1, 21)]
+    df = spark.createDataFrame(rows, "v bigint").repartition(3)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        strict = heavy_hitters(df, "v", k=4, top=1).collect()
+    assert not [w for w in caught if "heavy_hitters" in str(w.message)]
+    loose = heavy_hitters(df, "v", k=4, top=1, strict=False).collect()
+    for got in (strict, loose):
+        assert [(r.value, r["count"]) for r in got] == [(big, 50)]

@@ -7,12 +7,16 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+import pytest
+
 from anomalydetection_spark.fixtures import MISSING_REF_MOD
-from anomalydetection_spark.operators.referential import (
-    orphan_refs,
-    referential_verdicts,
-    referential_violations,
-)
+from anomalydetection_spark.operators.referential import orphan_refs
+from anomalydetection_spark.plans.pipeline import run_validation
+
+
+@pytest.fixture(scope="module")
+def validated(spark, docs, catalog):
+    return run_validation(spark, docs, catalog=catalog)
 
 
 def _expected_orphan_pairs(docs, catalog):
@@ -66,21 +70,40 @@ def test_no_false_positives_on_clean_refs(spark, docs, catalog):
     assert orphan_docs == must_flag
 
 
-def test_violation_rows_preserve_spans(spark, docs, catalog):
-    """Every violation row's (doc_id, spans) pair exists verbatim in the
-    source table (multiset containment — planted duplicate doc_ids make
-    a plain re-join a cross product, so compare serialized pairs)."""
-    v = referential_violations(docs, catalog, spark)
+def test_violation_rows_preserve_spans(spark, docs, catalog, validated):
+    """Every referential violation row's (doc_id, spans) pair exists
+    verbatim in the source table (multiset containment — planted
+    duplicate doc_ids make a plain re-join a cross product, so compare
+    serialized pairs), and its detail lists exactly that doc's orphan
+    refs."""
+    v = validated.violations.filter(F.col("check") == "referential")
     jkey = F.coalesce(F.to_json("spans"), F.lit("<null>"))
     viol_pairs = v.select("doc_id", jkey.alias("j"))
     src_pairs = docs.select("doc_id", jkey.alias("j"))
     assert viol_pairs.exceptAll(src_pairs).count() == 0
     assert v.count() > 0
+    got: dict[str, set] = {}
+    for r in v.collect():
+        assert r.detail.startswith("orphan_refs=")
+        refs = r.detail[len("orphan_refs="):].split(",")
+        assert refs == sorted(set(refs)) and r.score == len(refs)
+        got.setdefault(r.doc_id, set()).update(refs)
+    want: dict[str, set] = {}
+    for r in orphan_refs(docs, catalog, spark).collect():
+        want.setdefault(r.doc_id, set()).add(r.media_ref)
+    assert got == want
 
 
-def test_verdicts_fail_only_partitions_with_orphans(spark, docs, catalog):
-    verd = referential_verdicts(docs, catalog, spark).collect()
-    failed = {r.partition_id for r in verd if r.verdict == "fail"}
+def test_verdicts_fail_only_partitions_with_orphans(
+    spark, docs, catalog, validated
+):
+    failed = {
+        r.partition_id
+        for r in validated.verdicts.collect()
+        if r.check == "referential"
+        and r.partition_id is not None
+        and r.verdict == "fail"
+    }
     orphan_parts = {
         r.partition_id
         for r in orphan_refs(docs, catalog, spark)

@@ -117,17 +117,20 @@ def test_repair_special_character_column_names(spark):
     )
 
     df = spark.createDataFrame(
-        [(1.0, "x"), (None, None), (3.0, "x")],
-        ["order value", "select"],  # space + reserved word
+        [(1.0, "x", 1.0), (None, None, None), (3.0, "x", 5.0)],
+        ["order value", "select", "a`b"],  # space, reserved word, backtick
     )
     rules = plan_repairs(df)
     by_col = {r.column: r for r in rules}
     assert by_col["order value"].strategy == "fill_median"
     assert by_col["order value"].fill_value == "2.0"
     assert by_col["select"].fill_value == "x"
+    assert by_col["a`b"].fill_value == "3.0"
     out = apply_repairs(df, rules).orderBy("order value").collect()
     assert [r["order value"] for r in out] == [1.0, 2.0, 3.0]
+    assert [r["a`b"] for r in out] == [1.0, 3.0, 5.0]
     assert sorted(out, key=lambda r: r["__repaired"])[-1]["__repaired"] == [
+        "a`b",
         "order value",
         "select",
     ]

@@ -1,40 +1,58 @@
-"""Column-stats profiler: conformance flags match the planted sets,
-histograms conserve mass, HLL distinct counts are within sketch error
-(SURVEY.md §5 item 1)."""
+"""Column-stats profiler and the pipeline's conformance flags: flags
+match the planted sets, histograms conserve mass, HLL distinct counts
+are within sketch error (SURVEY.md §5 item 1)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from anomalydetection_spark.operators import stats as S
+from anomalydetection_spark.operators.uniqueness import duplicate_keys
+from anomalydetection_spark.plans.pipeline import CHECKS, _all_violations
+
+CONF = [c.name for c in CHECKS if c.flag is not None]
 
 
-def test_conformance_flags_exact(docs, expected):
-    c = S.doc_conformance(docs)
-    assert {
-        r.doc_id for r in c.filter("null_spans").collect()
-    } == expected["null_spans"]
-    assert {
-        r.doc_id for r in c.filter("empty_spans").collect()
-    } == expected["empty_spans"]
-    assert {
-        r.doc_id for r in c.filter("nonmonotone_offsets").collect()
-    } == expected["nonmono"]
-    assert {
-        r.doc_id for r in c.filter("n_incoherent > 0").collect()
-    } == expected["incoherent"]
+@pytest.fixture(scope="module")
+def conformance(docs):
+    """The wide scan's conformance violation rows (one per flagged doc
+    row, comma detail of the raised flags)."""
+    v = _all_violations(docs, duplicate_keys(docs), None)
+    return v.filter(F.col("check") == "conformance").cache()
 
 
-def test_partition_stats_sum_to_table(docs):
+@pytest.fixture(scope="module")
+def conformance_rows(conformance):
+    return conformance.collect()
+
+
+def test_conformance_flags_exact(conformance_rows, expected):
+    flagged: dict[str, set] = {n: set() for n in CONF}
+    for r in conformance_rows:
+        for name in r.detail.split(","):
+            flagged[name].add(r.doc_id)
+    assert flagged["null_spans"] == expected["null_spans"]
+    assert flagged["empty_spans"] == expected["empty_spans"]
+    assert flagged["offset_monotonicity"] == expected["nonmono"]
+    assert flagged["span_coherence"] == expected["incoherent"]
+    assert flagged["null_span_kind"]
+
+
+def test_partition_stats_sum_to_table(docs, conformance_rows):
     ps = S.partition_stats(docs)
     tot = ps.agg(
-        F.sum("n_rows").alias("r"), F.sum("n_spans").alias("s")
+        F.sum("n_rows").alias("r"), F.sum("n_spans").alias("s"),
+        *[F.sum(n).alias(n) for n in CONF],
     ).first()
     assert tot.r == docs.count()
     exact_spans = docs.select(
         F.sum(F.coalesce(F.size("spans"), F.lit(0)))
     ).first()[0]
     assert tot.s == exact_spans
+    # the profiler sums the same flags the violation rows carry
+    for n in CONF:
+        assert tot[n] == sum(n in r.detail.split(",") for r in conformance_rows)
 
 
 def test_hll_vs_exact_distinct(docs):
@@ -61,25 +79,38 @@ def test_kind_histogram_covers_all_kinds(docs):
     assert {"text", "image", "audio", "table", "__null__"} <= kinds
 
 
-def test_conformance_verdicts_thresholds(docs):
-    # planted rates ≈0.15-0.5% — a 1% gate passes, a 0.01% gate fails
-    lax = S.conformance_verdicts(docs, max_null_rate=0.5, max_type_error_rate=0.5)
-    assert all(r.verdict == "pass" for r in lax.collect())
-    strict = S.conformance_verdicts(
-        docs, max_null_rate=1e-6, max_type_error_rate=1e-6
-    )
-    assert any(r.verdict == "fail" for r in strict.collect())
+def test_conformance_verdicts_thresholds(spark, docs):
+    # planted rates ≈0.15-0.5% — a 50% gate passes, a 0.0001% gate fails
+    from dataclasses import replace
+
+    from anomalydetection_spark.config import DEFAULT_CONFIG
+    from anomalydetection_spark.plans.pipeline import run_validation
+
+    def verdicts_at(rate):
+        cfg = replace(
+            DEFAULT_CONFIG, max_null_rate=rate, max_type_error_rate=rate
+        )
+        return [
+            r.verdict
+            for r in run_validation(spark, docs, cfg=cfg).verdicts.collect()
+            if r.check in CONF and r.partition_id is not None
+        ]
+
+    assert set(verdicts_at(0.5)) == {"pass"}
+    assert "fail" in verdicts_at(1e-6)
 
 
-def test_conformance_violations_detail(docs, expected):
-    v = S.conformance_violations(docs)
-    got = {r.doc_id: r.detail for r in v.collect()}
-    for d in expected["null_spans"]:
-        assert "null_spans" in got[d]
-    for d in expected["nonmono"]:
-        assert "nonmonotone_offsets" in got[d]
-    for d in expected["incoherent"]:
-        assert "span_coherence" in got[d]
+def test_conformance_violations_detail(conformance, conformance_rows, docs):
+    """Detail lists the raised flags comma-separated in check-table
+    order, score is 1.0, and spans travel verbatim."""
+    for r in conformance_rows:
+        names = r.detail.split(",")
+        assert names and names == [n for n in CONF if n in names]
+        assert r.score == 1.0
+    jkey = F.coalesce(F.to_json("spans"), F.lit("<null>"))
+    got = conformance.select("doc_id", "partition_id", jkey.alias("j"))
+    src = docs.select("doc_id", "partition_id", jkey.alias("j"))
+    assert got.exceptAll(src).count() == 0
 
 
 def test_profile_table_generic(spark):

@@ -57,6 +57,58 @@ def test_stream_validate_drains_backlog(spark, docs, catalog, tmp_path):
     assert v3.select("batch_id").distinct().count() > batches_1
 
 
+def test_stream_judges_with_config_and_batch_check_set(
+    spark, docs, catalog, tmp_path
+):
+    """stream_validate judges with ``cfg`` exactly like run_validation:
+    at max_null_rate=0 its null_spans verdicts fail in the same
+    partitions as the batch pass's (a zero gate fails a partition in
+    whichever micro-batch carries its null-spans doc). The stream, the
+    batch pass and the pre-flight judge one check set — the stream
+    only renames uniqueness to its within-batch scope."""
+    from dataclasses import replace
+
+    from anomalydetection_spark.config import DEFAULT_CONFIG
+    from anomalydetection_spark.plans.pipeline import (
+        preflight_estimate,
+        run_validation,
+    )
+
+    cfg = replace(DEFAULT_CONFIG, max_null_rate=0.0)
+    inp = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    _write_batch(spark, docs, inp, 0, 8)
+    stream_validate(
+        spark, inp, out, str(tmp_path / "ckpt"), catalog=catalog, cfg=cfg
+    ).awaitTermination()
+    streamed = [
+        r for r in spark.read.parquet(os.path.join(out, "verdicts")).collect()
+        if r.partition_id is not None
+    ]
+    batch = [
+        r for r in run_validation(
+            spark, docs, catalog=catalog, cfg=cfg
+        ).verdicts.collect()
+        if r.partition_id is not None
+    ]
+
+    def failing(rows):
+        return {
+            r.partition_id for r in rows
+            if r.check == "null_spans" and r.verdict == "fail"
+        }
+
+    assert failing(batch) and failing(streamed) == failing(batch)
+    stream_checks = {
+        "uniqueness" if r.check == "uniqueness_batch" else r.check
+        for r in streamed
+    }
+    preflight = preflight_estimate(spark, docs, catalog=catalog, cfg=cfg)
+    assert stream_checks == {r.check for r in batch} == {
+        r.check for r in preflight.collect()
+    }
+
+
 def test_streaming_checkpoint_files_exist(spark, docs, catalog, tmp_path):
     inp = str(tmp_path / "in")
     out = str(tmp_path / "out")

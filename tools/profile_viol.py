@@ -38,9 +38,10 @@ def main() -> None:
     clock("conformance_only", lambda: P._all_violations(
         docs, dups, None, True).filter(
         F.col("check").isin("conformance")).count())
-    orphans = P.orphan_refs(docs, catalog, spark, salt_buckets=8)
+    orphans = P.orphan_refs(docs, catalog, spark, salt_buckets=8,
+                            row_fingerprint=True)
     orphan_doc = (
-        orphans.groupBy("doc_id", "partition_id")
+        orphans.groupBy("doc_id", "partition_id", "row_fp")
         .agg(F.sort_array(F.collect_set("media_ref")).alias("orphan_refs"),
              F.count("*").alias("n_orphans")).cache())
     clock("orphan_count", orphan_doc.count)
