@@ -12,46 +12,80 @@ global threshold than the per-partition one (drain3.ini:112 vs :98),
 
 Scale design: drift never sees row-level data — only merged histograms
 (bounded cardinality: kinds × bins) produced by stats.py in one
-aggregation pass. KS is computed from histogram CDFs (max-gap over a
-cumulative-sum window), error bounded by bin width; exact small-data KS
-is cross-checked in tests. All window/aggregate math is JVM-side.
+aggregation pass. Every statistic reads ONE statistics frame
+(``_stats``), built by a plan with a single exchange: the current and
+baseline histograms are tagged, unioned and hash-partitioned on the
+group keys (coalesced to one partition when there are none); a
+(keys, bucket) sum then aligns the two sides, one keys-partitioned
+window adds side totals and shares, one bucket-ordered window the CDF
+gap, and one aggregate over the keys yields PSI, KS, chi-squared and
+JSD. Because each later operator groups by the keys or a superset of
+them, Spark plans no further shuffle, and ``drift_verdicts`` turns the
+aggregate into verdict rows with one ``stack()`` — two Spark jobs per
+collect. KS from histogram CDFs is exact up to bin width; exact
+small-data KS is cross-checked in tests. All math is JVM-side.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 EPS = 1e-6
 
 
-def _normalized(hist: DataFrame, keys: list[str], bucket_col: str) -> DataFrame:
-    """Add p = count / total within each `keys` group."""
-    w = Window.partitionBy(*keys) if keys else Window.partitionBy(F.lit(1))
-    return hist.withColumn("p", F.col("count") / F.sum("count").over(w))
-
-
-def _joined_shares(
+def _stats(
     current: DataFrame,
     baseline: DataFrame,
     keys: list[str],
-    bucket_col: str,
+    bucket_col: str = "bucket",
 ) -> DataFrame:
-    """Normalized per-bucket shares of both sides, full-outer joined —
-    the shared input of PSI and histogram-KS (built once per drift
-    pass; these are bounded-cardinality frames: |keys| × bins rows)."""
-    cur = _normalized(current, keys, bucket_col).select(
-        *keys, bucket_col, F.col("p").alias("p_cur")
+    """The statistics frame every drift statistic reads: one row per
+    (keys..., bucket) present on either side, with both sides' counts
+    (``c_cur``, ``c_base``), group totals (``n_cur``, ``n_base``),
+    shares (``p_cur``, ``p_base``) and the CDF gap at that bucket
+    (``cdf_gap``).
+
+    ONE exchange: the tagged union of both histograms is hash-
+    partitioned on ``keys`` (or coalesced to one partition when there
+    are none), and every later operator groups by ``keys`` or a
+    superset of it, so Spark plans no further shuffle — per-group
+    drift (``keys`` starting with ``partition_id``) stays parallel.
+    A bucket absent on one side gets count 0 from the bucket sum; a
+    side with no mass in a group gets shares of 0 (explicit guard:
+    ANSI mode raises on the 0/0 otherwise)."""
+    tagged = current.select(
+        *keys, bucket_col,
+        F.col("count").alias("c_cur"), F.lit(0).cast("long").alias("c_base"),
+    ).unionByName(
+        baseline.select(
+            *keys, bucket_col,
+            F.lit(0).cast("long").alias("c_cur"), F.col("count").alias("c_base"),
+        )
     )
-    base = _normalized(baseline, keys, bucket_col).select(
-        *keys, bucket_col, F.col("p").alias("p_base")
-    )
-    return cur.join(base, [*keys, bucket_col], "full_outer").fillna(
-        0.0, subset=["p_cur", "p_base"]
+    tagged = tagged.repartition(*keys) if keys else tagged.coalesce(1)
+    w = Window.partitionBy(*keys)
+    cdf = w.orderBy(bucket_col).rowsBetween(Window.unboundedPreceding, 0)
+
+    def share(side: str) -> Column:
+        n = F.col(f"n_{side}")
+        return F.when(n > 0, F.col(f"c_{side}") / n).otherwise(0.0)
+
+    return (
+        tagged.groupBy(*keys, bucket_col)
+        .agg(F.sum("c_cur").alias("c_cur"), F.sum("c_base").alias("c_base"))
+        .withColumn("n_cur", F.sum("c_cur").over(w))
+        .withColumn("n_base", F.sum("c_base").over(w))
+        .withColumn("p_cur", share("cur"))
+        .withColumn("p_base", share("base"))
+        .withColumn(
+            "cdf_gap",
+            F.abs(F.sum("p_cur").over(cdf) - F.sum("p_base").over(cdf)),
+        )
     )
 
 
-def _psi_contrib():
+def _psi_contrib() -> Column:
     """Per-bucket PSI contribution (ε-floored) — the ONE definition
     shared by the aggregate and the explain surface."""
     p = F.greatest(F.col("p_cur"), F.lit(EPS))
@@ -59,15 +93,7 @@ def _psi_contrib():
     return (p - q) * F.log(p / q)
 
 
-def _psi_from_shares(joined: DataFrame, keys: list[str]) -> DataFrame:
-    return joined.groupBy(*keys).agg(F.sum(_psi_contrib()).alias("psi"))
-
-
-def _jsd_from_shares(joined: DataFrame, keys: list[str]) -> DataFrame:
-    """JSD aggregation over a normalized-shares join — the ONE
-    implementation behind both jsd_from_histograms and the
-    drift_verdicts optional-metric path (a divergent copy would let an
-    epsilon or log-base fix land on one side only)."""
+def _jsd_contrib() -> Column:
     m = (F.col("p_cur") + F.col("p_base")) / 2
     kl_p = F.when(
         F.col("p_cur") > 0,
@@ -77,24 +103,43 @@ def _jsd_from_shares(joined: DataFrame, keys: list[str]) -> DataFrame:
         F.col("p_base") > 0,
         F.col("p_base") * F.log(F.col("p_base") / m),
     ).otherwise(0.0)
-    return joined.groupBy(*keys).agg(F.sum((kl_p + kl_q) / 2).alias("jsd"))
+    return (kl_p + kl_q) / 2
 
 
-def _ks_from_shares(
-    joined: DataFrame, keys: list[str], bucket_col: str
-) -> DataFrame:
-    w = (
-        Window.partitionBy(*keys)
-        if keys
-        else Window.partitionBy(F.lit(1))
-    ).orderBy(bucket_col).rowsBetween(Window.unboundedPreceding, 0)
-    cdfs = joined.select(
-        *keys,
-        F.sum("p_cur").over(w).alias("cdf_cur"),
-        F.sum("p_base").over(w).alias("cdf_base"),
+def _chi2_contrib() -> Column:
+    n_tot = F.col("n_cur") + F.col("n_base")
+    pooled = F.when(
+        n_tot > 0, (F.col("c_cur") + F.col("c_base")) / n_tot
     )
-    return cdfs.groupBy(*keys).agg(
-        F.max(F.abs(F.col("cdf_cur") - F.col("cdf_base"))).alias("ks")
+    e_cur = F.col("n_cur") * pooled
+    e_base = F.col("n_base") * pooled
+    return F.when(
+        e_cur > 0, F.pow(F.col("c_cur") - e_cur, F.lit(2)) / e_cur
+    ).otherwise(0.0) + F.when(
+        e_base > 0, F.pow(F.col("c_base") - e_base, F.lit(2)) / e_base
+    ).otherwise(0.0)
+
+
+# statistic name → its per-group aggregate over the statistics frame
+_STATISTICS = {
+    "psi": lambda: F.sum(_psi_contrib()),
+    "ks": lambda: F.max("cdf_gap"),
+    "chi2": lambda: F.sum(_chi2_contrib()),
+    "dof": lambda: (F.count("*") - 1).cast("int"),
+    "jsd": lambda: F.sum(_jsd_contrib()),
+}
+
+
+def _statistics(
+    current: DataFrame,
+    baseline: DataFrame,
+    keys: list[str],
+    names: list[str],
+    bucket_col: str = "bucket",
+) -> DataFrame:
+    """(keys..., *names): the named statistics per group."""
+    return _stats(current, baseline, keys, bucket_col).groupBy(*keys).agg(
+        *[_STATISTICS[n]().alias(n) for n in names]
     )
 
 
@@ -110,9 +155,7 @@ def psi(
     empty on one side contribute finitely. Inputs are histogram tables
     (keys..., bucket, count); output one row per group: (keys..., psi).
     """
-    return _psi_from_shares(
-        _joined_shares(current, baseline, keys, bucket_col), keys
-    )
+    return _statistics(current, baseline, keys, ["psi"], bucket_col)
 
 
 def ks_from_histograms(
@@ -124,9 +167,7 @@ def ks_from_histograms(
     """Two-sample KS statistic from binned distributions: max |CDF gap|
     over the bucket axis (cumulative window sum per side). Approximation
     error ≤ one bin's mass; see tests for the exact cross-check."""
-    return _ks_from_shares(
-        _joined_shares(current, baseline, keys, bucket_col), keys, bucket_col
-    )
+    return _statistics(current, baseline, keys, ["ks"], bucket_col)
 
 
 def jsd_from_histograms(
@@ -143,9 +184,7 @@ def jsd_from_histograms(
     either side has mass; a side's zero-mass term is 0 by the
     0·ln(0) = 0 convention. Same bounded histogram inputs as the rest
     of the drift family."""
-    return _jsd_from_shares(
-        _joined_shares(current, baseline, keys, bucket_col), keys
-    )
+    return _statistics(current, baseline, keys, ["jsd"], bucket_col)
 
 
 def psi_explain(
@@ -161,15 +200,12 @@ def psi_explain(
     this shows which part of the distribution moved). Output:
     (keys..., bucket, p_cur, p_base, psi_contrib, rank). Bounded:
     k × |groups| rows."""
-    joined = _joined_shares(current, baseline, keys, bucket_col)
-    contrib = _psi_contrib()
-    w = (
-        Window.partitionBy(*keys)
-        if keys
-        else Window.partitionBy(F.lit(1))
-    ).orderBy(F.desc(F.abs(F.col("psi_contrib"))), F.asc(bucket_col))
+    w = Window.partitionBy(*keys).orderBy(
+        F.desc(F.abs(F.col("psi_contrib"))), F.asc(bucket_col)
+    )
     return (
-        joined.withColumn("psi_contrib", contrib)
+        _stats(current, baseline, keys, bucket_col)
+        .withColumn("psi_contrib", _psi_contrib())
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(*keys, bucket_col, "p_cur", "p_base", "psi_contrib", "rank")
@@ -188,40 +224,16 @@ def chi2_from_histograms(
     H0 both samples draw from one pooled distribution, so each side's
     expected count in a bucket is its sample size times the pooled
     bucket share. chi2 = Σ_sides Σ_buckets (O − E)² / E; dof = (buckets
-    with any mass) − 1. Complements PSI (which ε-floors empty buckets
-    and is sample-size-free) with the classical statistic whose null
-    distribution is known — a fixed chi2 threshold maps to a p-value.
+    present on either side) − 1. Complements PSI (which ε-floors empty
+    buckets and is sample-size-free) with the classical statistic whose
+    null distribution is known — a fixed chi2 threshold maps to a
+    p-value.
 
     Inputs are bounded histogram frames (keys × bins rows) from
     stats.py, so like the other drift rules this never touches
     row-level data and costs nothing extra at 10^12-doc scale.
     """
-    cur = current.select(*keys, bucket_col, F.col("count").alias("c_cur"))
-    base = baseline.select(*keys, bucket_col, F.col("count").alias("c_base"))
-    j = cur.join(base, [*keys, bucket_col], "full_outer").fillna(
-        0, subset=["c_cur", "c_base"]
-    )
-    w = Window.partitionBy(*keys) if keys else Window.partitionBy(F.lit(1))
-    j = (
-        j.withColumn("n_cur", F.sum("c_cur").over(w))
-        .withColumn("n_base", F.sum("c_base").over(w))
-        .withColumn(
-            "pooled",
-            (F.col("c_cur") + F.col("c_base"))
-            / (F.col("n_cur") + F.col("n_base")),
-        )
-    )
-    e_cur = F.col("n_cur") * F.col("pooled")
-    e_base = F.col("n_base") * F.col("pooled")
-    contrib = F.when(
-        e_cur > 0, F.pow(F.col("c_cur") - e_cur, F.lit(2)) / e_cur
-    ).otherwise(0.0) + F.when(
-        e_base > 0, F.pow(F.col("c_base") - e_base, F.lit(2)) / e_base
-    ).otherwise(0.0)
-    return j.groupBy(*keys).agg(
-        F.sum(contrib).alias("chi2"),
-        (F.count("*") - 1).cast("int").alias("dof"),
-    )
+    return _statistics(current, baseline, keys, ["chi2", "dof"], bucket_col)
 
 
 def drift_verdicts(
@@ -238,55 +250,50 @@ def drift_verdicts(
     group's first key is surfaced as partition_id when integer-like),
     plus optional chi-squared and Jensen-Shannon rows when their
     thresholds are given — all four statistics derive from the SAME
-    bounded histogram pair, so extra metrics cost extra bounded joins,
-    never another table scan.
-
-    The normalized-shares join is built ONCE and feeds PSI/KS/JSD —
-    one fewer histogram join + normalization pass per drift stage."""
-    shares = _joined_shares(current_hist, baseline_hist, keys, "bucket")
-    p = _psi_from_shares(shares, keys)
-    k = _ks_from_shares(shares, keys, "bucket")
-    j = p.join(k, keys, "full_outer").fillna(0.0, subset=["psi", "ks"])
+    bounded histogram pair in ONE plan: the statistics frame's single
+    exchange, one aggregate over ``keys`` computing every requested
+    statistic, and one ``stack()`` into verdict rows (over materialized
+    histograms a collect is two Spark jobs, however many statistics
+    are on)."""
     metrics = [("psi", psi_threshold), ("ks", ks_threshold)]
     if chi2_threshold is not None:
-        c = chi2_from_histograms(
-            current_hist, baseline_hist, keys
-        ).drop("dof")
-        j = j.join(c, keys, "full_outer").fillna(0.0, subset=["chi2"])
         metrics.append(("chi2", chi2_threshold))
     if jsd_threshold is not None:
-        jd = _jsd_from_shares(shares, keys)
-        j = j.join(jd, keys, "full_outer").fillna(0.0, subset=["jsd"])
         metrics.append(("jsd", jsd_threshold))
+    scores = _statistics(
+        current_hist, baseline_hist, keys, [m for m, _ in metrics]
+    )
+    stack_args = []
+    for metric, thresh in metrics:
+        stack_args += [
+            F.lit(metric), F.col(metric).cast("double"), F.lit(float(thresh)),
+        ]
     pid = (
         F.col(keys[0]).cast("int")
         if keys and keys[0] == "partition_id"
         else F.lit(None).cast("int")
     )
-    rows = []
-    for metric, thresh in metrics:
-        rows.append(
-            j.select(
-                F.concat_ws(
-                    "_",
-                    F.lit(check_prefix),
-                    F.lit(metric),
-                    *[F.col(c).cast("string") for c in keys if c != "partition_id"],
-                ).alias("check"),
-                pid.alias("partition_id"),
-                F.lit(None).cast("long").alias("n_rows"),
-                F.lit(None).cast("long").alias("n_violations"),
-                F.lit(None).cast("double").alias("violation_rate"),
-                F.col(metric).cast("double").alias("score"),
-                F.when(F.col(metric) > thresh, "fail").otherwise("pass").alias(
-                    "verdict"
-                ),
-            )
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out
+    return scores.select(
+        *keys,
+        F.stack(F.lit(len(metrics)), *stack_args).alias(
+            "_metric", "_score", "_threshold"
+        ),
+    ).select(
+        F.concat_ws(
+            "_",
+            F.lit(check_prefix),
+            F.col("_metric"),
+            *[F.col(c).cast("string") for c in keys if c != "partition_id"],
+        ).alias("check"),
+        pid.alias("partition_id"),
+        F.lit(None).cast("long").alias("n_rows"),
+        F.lit(None).cast("long").alias("n_violations"),
+        F.lit(None).cast("double").alias("violation_rate"),
+        F.col("_score").alias("score"),
+        F.when(F.col("_score") > F.col("_threshold"), "fail")
+        .otherwise("pass")
+        .alias("verdict"),
+    )
 
 
 def ema_3sigma(

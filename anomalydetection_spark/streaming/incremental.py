@@ -78,10 +78,11 @@ def _batch_verdicts(
     from ..plans.pipeline import (
         _CAP_HELPER_COLS,
         CHECKS,
+        VERDICTS_DDL,
         _all_violations,
         _cap_violations,
-        _verdicts_from_capped,
-        _verdicts_from_violations,
+        _count_grid,
+        _grid_to_verdicts,
     )
 
     totals = batch.groupBy("partition_id").agg(F.count("*").alias("n_rows"))
@@ -109,75 +110,73 @@ def _batch_verdicts(
         batch, dups, orphan_doc, orphan_udf=orphan_udf,
         unique_key=cfg.unique_key,
     )
-    has_catalog = catalog is not None
-    if max_violation_exemplars is not None:
+    capped = max_violation_exemplars is not None
+    if capped:
         # capped stream is bounded (≤K rows per check × partition) —
-        # cache it, derive exact verdict counts from the stamped window
-        # aggregates, then write the exemplars in VIOLATIONS_SCHEMA
-        # shape (helper columns dropped)
-        capped = _cap_violations(violations, max_violation_exemplars).cache()
+        # cache it, write the exemplars in VIOLATIONS_SCHEMA shape
+        # (helper columns dropped), then take exact verdict counts
+        # from the stamped window aggregates
+        violations = _cap_violations(
+            violations, max_violation_exemplars
+        ).cache()
         if violations_out is not None:
             # deterministic per-batch path + overwrite = idempotent on
             # micro-batch replay (foreachBatch may re-run a batch id
             # after failure; append would double the rows)
-            capped.drop(*_CAP_HELPER_COLS).write.mode("overwrite").parquet(
-                violations_out
-            )
-        # verdict cardinality is partitions × checks — metadata scale;
-        # localize it (same judge-blessed pattern as run_validation) so
-        # the per-batch cache can be released deterministically
-        rows = _verdicts_from_capped(capped, totals, has_catalog, cfg).collect()
-        capped.unpersist()
-        out = batch.sparkSession.createDataFrame(
-            rows,
-            schema=(
-                "check string, partition_id int, n_rows long,"
-                " n_violations long, violation_rate double, score double,"
-                " verdict string"
-            ),
-        )
-    else:
-        if violations_out is not None:
-            violations.write.mode("overwrite").parquet(violations_out)
-            violations = batch.sparkSession.read.parquet(violations_out)
-        out = _verdicts_from_violations(violations, totals, has_catalog, cfg)
+            violations.drop(*_CAP_HELPER_COLS).write.mode(
+                "overwrite"
+            ).parquet(violations_out)
+    elif violations_out is not None:
+        violations.write.mode("overwrite").parquet(violations_out)
+        violations = batch.sparkSession.read.parquet(violations_out)
+    # verdict cardinality is partitions × checks — metadata scale:
+    # judged on the driver exactly as in run_validation
+    grid = _count_grid(violations, capped)
+    if capped:
+        violations.unpersist()
+    rows = _grid_to_verdicts(
+        grid,
+        {r.partition_id: r.n_rows for r in totals.collect()},
+        catalog is not None,
+        cfg,
+    )
     # a micro-batch only asserts WITHIN-batch uniqueness (cross-batch
     # dup detection is the periodic batch pass over the manifest) —
     # keep the check name honest about that scope
-    within_batch = [c.name for c in CHECKS if c.family == "uniqueness"]
-    out = out.withColumn(
-        "check",
-        F.when(
-            F.col("check").isin(within_batch),
-            F.concat(F.col("check"), F.lit("_batch")),
-        ).otherwise(F.col("check")),
-    )
+    within_batch = {c.name for c in CHECKS if c.family == "uniqueness"}
+    rows = [
+        (f"{r[0]}_batch" if r[0] in within_batch else r[0], *r[1:])
+        for r in rows
+    ]
     if baseline_hist is not None:
         # distribution drift per micro-batch against the STORED
         # baseline: the batch reduces to a bounded (kind x bucket)
-        # histogram before any join, so the per-trigger cost is a
-        # map-side partial agg + a histogram-sized join regardless of
-        # batch size
+        # histogram before the one keyed shuffle, so the per-trigger
+        # cost is a map-side partial agg + a histogram-sized plan
+        # regardless of batch size
         from ..operators import drift as drift_ops
 
         # the batch histogram MUST use the same binning the stored
         # baseline was built with — a 64-bin batch against a 128-bin
         # baseline zero-fills half the buckets and fires phantom drift
         d = cfg.drift
-        dv = drift_ops.drift_verdicts(
-            stats_ops.length_histogram(
-                batch, bins=d.histogram_bins, bin_width=d.histogram_bin_width
-            ),
-            baseline_hist,
-            keys=["kind"],
-            psi_threshold=d.psi_threshold_global,
-            ks_threshold=d.ks_threshold_global,
-            check_prefix="drift_len_batch",
-            chi2_threshold=d.chi2_threshold_global,
-            jsd_threshold=d.jsd_threshold_global,
-        )
-        out = out.unionByName(dv)
-    return out
+        rows += [
+            tuple(r)
+            for r in drift_ops.drift_verdicts(
+                stats_ops.length_histogram(
+                    batch, bins=d.histogram_bins,
+                    bin_width=d.histogram_bin_width,
+                ),
+                baseline_hist,
+                keys=["kind"],
+                psi_threshold=d.psi_threshold_global,
+                ks_threshold=d.ks_threshold_global,
+                check_prefix="drift_len_batch",
+                chi2_threshold=d.chi2_threshold_global,
+                jsd_threshold=d.jsd_threshold_global,
+            ).collect()
+        ]
+    return batch.sparkSession.createDataFrame(rows, schema=VERDICTS_DDL)
 
 
 def stream_validate(

@@ -64,10 +64,12 @@ def _fresh_spark(ncores: int):
     )
 
 
-def _materialize_bench_tables(spark) -> tuple[str, str, str]:
-    """Generate the interleaved documents corpus + media catalog once
-    (deterministic, seed 42) and persist as parquet — the SAME input
-    bytes feed every parallelism level."""
+def _materialize_bench_tables(
+    spark, n_docs: int = N_DOCS_BENCH
+) -> tuple[str, str, str]:
+    """Generate the interleaved ``n_docs`` documents corpus + media
+    catalog once (deterministic, seed 42) and persist as parquet — the
+    SAME input bytes feed every parallelism level."""
     from anomalydetection_spark.fixtures import (
         generate_documents,
         generate_media_catalog,
@@ -75,9 +77,9 @@ def _materialize_bench_tables(spark) -> tuple[str, str, str]:
 
     from anomalydetection_spark.operators.stats import length_histogram
 
-    docs_path = os.path.join(WORK_DIR, f"documents_{N_DOCS_BENCH}")
+    docs_path = os.path.join(WORK_DIR, f"documents_{n_docs}")
     cat_path = os.path.join(WORK_DIR, "media_catalog")
-    base_path = os.path.join(WORK_DIR, f"baseline_hist_{N_DOCS_BENCH}")
+    base_path = os.path.join(WORK_DIR, f"baseline_hist_{n_docs}")
     if not os.path.exists(os.path.join(docs_path, "_SUCCESS")):
         shutil.rmtree(docs_path, ignore_errors=True)
         # NO repartition before the write: the generator already emits
@@ -87,7 +89,7 @@ def _materialize_bench_tables(spark) -> tuple[str, str, str]:
         # and exhausted the sandbox disk before the write began. The
         # gen-partition layout is the same 64 files with the same rows.
         generate_documents(
-            spark, N_DOCS_BENCH, seed=42, n_partitions=64, n_media=50_000
+            spark, n_docs, seed=42, n_partitions=64, n_media=50_000
         ).write.mode("overwrite").parquet(docs_path)
     if not os.path.exists(os.path.join(cat_path, "_SUCCESS")):
         shutil.rmtree(cat_path, ignore_errors=True)

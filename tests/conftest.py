@@ -74,3 +74,24 @@ def expected(docs):
     from anomalydetection_spark.fixtures import expected_violation_doc_ids
 
     return expected_violation_doc_ids(N_DOCS)
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` → ``(fn(), Spark jobs fn submitted)``, read
+    from the status store's job list (job ids are sequential), which
+    also sees jobs submitted from driver pool threads — those do not
+    inherit the caller's job group."""
+    jsc = spark.sparkContext._jsc.sc()
+
+    def last_job_id() -> int:
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(None)
+        return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
+
+    def count(fn):
+        before = last_job_id()
+        out = fn()
+        return out, last_job_id() - before
+
+    return count

@@ -279,6 +279,163 @@ def test_drift_verdicts_optional_chi2_jsd_rows(spark):
     assert all(r.verdict == "pass" for r in identical.collect())
 
 
+def _reference_drift(cur: dict, base: dict) -> dict:
+    """psi / ks / chi2 / jsd / dof of one group, replayed in plain
+    Python from the definitions: ε-floored PSI, max CDF gap, pooled
+    two-sample chi2 over the buckets present on either side, JSD in
+    nats; a side without mass has shares 0."""
+    import math
+
+    buckets = sorted(set(cur) | set(base))
+    c = [cur.get(b, 0) for b in buckets]
+    q = [base.get(b, 0) for b in buckets]
+    n_c, n_b = sum(c), sum(q)
+    p = [x / n_c if n_c else 0.0 for x in c]
+    r = [x / n_b if n_b else 0.0 for x in q]
+    eps = 1e-6
+    psi_v = sum(
+        (max(a, eps) - max(b, eps)) * math.log(max(a, eps) / max(b, eps))
+        for a, b in zip(p, r)
+    )
+    ks, ca, cb = 0.0, 0.0, 0.0
+    for a, b in zip(p, r):
+        ca, cb = ca + a, cb + b
+        ks = max(ks, abs(ca - cb))
+    jsd = sum(
+        ((a * math.log(a / ((a + b) / 2)) if a > 0 else 0.0)
+         + (b * math.log(b / ((a + b) / 2)) if b > 0 else 0.0)) / 2
+        for a, b in zip(p, r)
+    )
+    chi2 = 0.0
+    for x, y in zip(c, q):
+        pooled = (x + y) / (n_c + n_b)
+        for o, n in ((x, n_c), (y, n_b)):
+            e = n * pooled
+            chi2 += (o - e) ** 2 / e if e > 0 else 0.0
+    return {"psi": psi_v, "ks": ks, "chi2": chi2, "jsd": jsd,
+            "dof": len(buckets) - 1}
+
+
+def _groups(rows: list[tuple]) -> dict:
+    """(*key, bucket, count) rows → {key tuple: {bucket: count}}."""
+    out: dict = {}
+    for *key, b, n in rows:
+        out.setdefault(tuple(key), {})[b] = n
+    return out
+
+
+def _close(a: float, b: float) -> bool:
+    import math
+
+    return math.isclose(a, b, rel_tol=1e-12, abs_tol=1e-15)
+
+
+def _assert_drift_matches_reference(spark, keys, cur_rows, base_rows):
+    """Every drift entry point — drift_verdicts with chi2 and JSD on,
+    and the four statistic functions — equals the reference per group,
+    including groups present on one side only."""
+    from anomalydetection_spark.operators.drift import (
+        chi2_from_histograms,
+        jsd_from_histograms,
+    )
+
+    schema = "".join(
+        f"{k} {'int' if k == 'partition_id' else 'string'}, " for k in keys
+    ) + "bucket int, count long"
+    cur = spark.createDataFrame(cur_rows, schema)
+    base = spark.createDataFrame(base_rows, schema)
+    gc, gb = _groups(cur_rows), _groups(base_rows)
+    want = {
+        g: _reference_drift(gc.get(g, {}), gb.get(g, {}))
+        for g in set(gc) | set(gb)
+    }
+    named = [k for k in keys if k != "partition_id"]
+    rows = drift_verdicts(
+        cur, base, keys, 0.1, 0.1, check_prefix="d",
+        chi2_threshold=30.0, jsd_threshold=0.05,
+    ).collect()
+    got = {(r.check, r.partition_id): r for r in rows}
+    assert len(got) == len(rows) == 4 * len(want)
+    for g, ref in want.items():
+        kv = dict(zip(keys, g))
+        suffix = "".join(f"_{kv[k]}" for k in named)
+        for m, thresh in (("psi", 0.1), ("ks", 0.1), ("chi2", 30.0),
+                          ("jsd", 0.05)):
+            r = got[(f"d_{m}{suffix}", kv.get("partition_id"))]
+            assert _close(r.score, ref[m]), (g, m, r.score, ref[m])
+            assert r.verdict == ("fail" if ref[m] > thresh else "pass")
+    for fn, cols in ((psi, ["psi"]), (ks_from_histograms, ["ks"]),
+                     (jsd_from_histograms, ["jsd"]),
+                     (chi2_from_histograms, ["chi2", "dof"])):
+        out = fn(cur, base, keys).collect()
+        assert len(out) == len(want)
+        for r in out:
+            ref = want[tuple(r[k] for k in keys)]
+            for col in cols:
+                assert _close(r[col], ref[col]), (fn.__name__, r, ref)
+
+
+def _random_rows(keyvals, seed, n_buckets=21):
+    rng = np.random.RandomState(seed)
+    return [
+        (*kv, b, int(rng.randint(1, 500)))
+        for kv in keyvals for b in range(n_buckets) if rng.rand() > 0.2
+    ]
+
+
+def test_drift_kind_only_in_current(spark):
+    _assert_drift_matches_reference(
+        spark, ["kind"],
+        _random_rows([("a",), ("x",)], 1), _random_rows([("a",)], 2),
+    )
+
+
+def test_drift_kind_only_in_baseline(spark):
+    _assert_drift_matches_reference(
+        spark, ["kind"],
+        _random_rows([("a",)], 3), _random_rows([("a",), ("y",)], 4),
+    )
+
+
+def test_drift_chi2_jsd_many_kinds(spark):
+    kinds = [("text",), ("image",), ("__null__",)]
+    _assert_drift_matches_reference(
+        spark, ["kind"], _random_rows(kinds, 5), _random_rows(kinds, 6),
+    )
+
+
+def test_drift_partition_id_first_key(spark):
+    """Per-partition drift: partition_id surfaces as the verdict
+    row's partition_id and stays out of the check name."""
+    groups = [(p, k) for p in range(4) for k in ("a", "b")]
+    _assert_drift_matches_reference(
+        spark, ["partition_id", "kind"],
+        _random_rows(groups, 7), _random_rows(groups, 8),
+    )
+
+
+def test_drift_no_keys(spark):
+    """keys=[]: one group, verdict checks named by prefix and metric."""
+    _assert_drift_matches_reference(
+        spark, [], _random_rows([()], 9), _random_rows([()], 10),
+    )
+
+
+def test_drift_verdicts_is_two_jobs(spark, count_jobs):
+    """One plan, one exchange: a drift_verdicts collect is at most two
+    Spark jobs (exchange map stage + result), with chi2 and JSD on."""
+    kinds = [("text",), ("image",), ("__null__",)]
+    schema = "kind string, bucket int, count long"
+    cur = spark.createDataFrame(_random_rows(kinds, 11), schema)
+    base = spark.createDataFrame(_random_rows(kinds, 12), schema)
+    for extra in ({}, {"chi2_threshold": 30.0, "jsd_threshold": 0.05}):
+        rows, jobs = count_jobs(
+            drift_verdicts(cur, base, ["kind"], 0.1, 0.1, **extra).collect
+        )
+        assert len(rows) == 3 * (2 + len(extra))
+        assert jobs <= 2, f"drift_verdicts ran {jobs} Spark jobs"
+
+
 def _series(spark, values, kind="k"):
     rows = [(kind, i, float(v)) for i, v in enumerate(values)]
     return spark.createDataFrame(rows, "kind string, t int, n double")

@@ -429,3 +429,48 @@ def test_validation_pass_scan_budget(spark, tmp_path):
         f"{files2 / n_files:.1f} scans (budget 4: the snapshot-hash "
         "scan must REPLACE the totals scan, not add one)"
     )
+
+
+def test_validation_pass_job_budget(spark, docs, catalog, count_jobs):
+    """The verdict tail's job pin: a warm manifest-less pass with a
+    catalog and a drift baseline submits at most 18 Spark jobs — drift
+    is one two-job plan and the per-partition gates are judged from the
+    count grid that materializes the violations, so no bounded
+    intermediate pays a plan of its own. ``current_hist`` comes back
+    as a materialized cache (the drift collect filled it), and fed
+    back as the baseline it scores zero drift."""
+    from anomalydetection_spark.operators.stats import length_histogram
+    from anomalydetection_spark.plans.pipeline import run_validation
+
+    hist = length_histogram(docs, bins=64, bin_width=8)
+    baseline = spark.createDataFrame(hist.collect(), hist.schema)
+
+    def one_pass(base):
+        return run_validation(spark, docs, catalog=catalog, baseline_hist=base)
+
+    def release(res):
+        res.violations.unpersist()
+        res.current_hist.unpersist()
+
+    release(one_pass(baseline))  # warm-up: first-touch jobs
+    res, jobs = count_jobs(lambda: one_pass(baseline))
+    assert jobs <= 18, f"warm pass ran {jobs} Spark jobs (budget 18)"
+
+    cached = (
+        spark._jsparkSession.sharedState()
+        .cacheManager()
+        .lookupCachedData(res.current_hist._jdf)
+    )
+    assert cached.isDefined()
+    assert (
+        cached.get().cachedRepresentation().cacheBuilder()
+        .isCachedColumnBuffersLoaded()
+    ), "current_hist is cached but not materialized"
+
+    again = one_pass(res.current_hist)
+    drift = [r for r in again.verdicts.collect() if r.check.startswith("drift_")]
+    assert drift and all(
+        r.score == 0.0 and r.verdict == "pass" for r in drift
+    ), drift
+    release(again)
+    release(res)

@@ -1,6 +1,11 @@
 """Micro-profile the wide violations stage's components at one core
 count: pure spans scan, conformance flags only, full _all_violations,
-and the verdict aggregation. python tools/profile_viol.py <ncores>
+and the verdicts judged from the per-partition count grid.
+
+    python tools/profile_viol.py <ncores> [n_docs]
+
+n_docs defaults to $BENCH_N_DOCS (16M); the corpus is generated once
+under $BENCH_WORK_DIR.
 """
 import json
 import os
@@ -13,11 +18,12 @@ from pyspark.sql import functions as F
 
 def main() -> None:
     ncores = int(sys.argv[1])
-    from bench import _fresh_spark, _materialize_bench_tables
+    from bench import N_DOCS_BENCH, _fresh_spark, _materialize_bench_tables
     from anomalydetection_spark.plans import pipeline as P
 
+    n_docs = int(sys.argv[2]) if len(sys.argv) > 2 else N_DOCS_BENCH
     spark = _fresh_spark(ncores)
-    docs_path, cat_path, base_path = _materialize_bench_tables(spark)
+    docs_path, cat_path, base_path = _materialize_bench_tables(spark, n_docs)
     docs = spark.read.parquet(docs_path)
     catalog = spark.read.parquet(cat_path)
 
@@ -51,10 +57,13 @@ def main() -> None:
     t["broadcast_orphans"] = bc
     viol = P._all_violations(docs, dups, orphan_doc, bc).cache()
     clock("all_violations_count", viol.count)
-    totals = docs.groupBy("partition_id").agg(F.count("*").alias("n_rows"))
-    verd = P._verdicts_from_violations(viol, totals, has_catalog=True,
-                                       cfg=P.DEFAULT_CONFIG)
-    clock("verdicts_agg", verd.count)
+    totals = {
+        r.partition_id: r.n_rows
+        for r in docs.groupBy("partition_id").agg(
+            F.count("*").alias("n_rows")).collect()
+    }
+    clock("verdicts_grid", lambda: P._grid_to_verdicts(
+        P._count_grid(viol), totals, has_catalog=True, cfg=P.DEFAULT_CONFIG))
     print(json.dumps({"ncores": ncores, **t}))
 
 
