@@ -20,9 +20,17 @@ Scale design:
 3. Hot keys (one media_ref shared by ~20% of spans): the join key is
    salted by replicating the (small) catalog side ``salt_buckets``
    ways — classic skew-salt — plus AQE skew-join splitting as backstop.
+
+The broadcast-or-shuffle choice is made here and nowhere else:
+``referential_side`` measures the catalog once and returns the side a
+validation pass attaches (row-local membership UDF, or the salted
+anti-join with its prebuilt Bloom filter); ``orphan_rows`` is the
+join side's per-row orphan aggregate.
 """
 
 from __future__ import annotations
+
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -263,3 +271,70 @@ def orphan_refs(
         ["row_fp"] if row_fingerprint else []
     )
     return out.dropDuplicates(dedup_cols)
+
+
+class ReferentialSide(NamedTuple):
+    """The catalog side of the referential check. Exactly one of
+    ``rowlocal_udf`` (broadcastable catalog: the membership UDF over
+    ``span_refs_column()``) and ``catalog`` (the salted anti-join probe
+    for ``orphan_rows``, with the catalog's row count and its prebuilt
+    Bloom filter or None) is set."""
+
+    rowlocal_udf: Callable | None
+    catalog: DataFrame | None = None
+    n_catalog: int | None = None
+    bloom: tuple | None = None
+    salt_buckets: int = 8
+
+
+def referential_side(
+    spark: SparkSession,
+    catalog: DataFrame | None,
+    salt_buckets: int = 8,
+    catalog_size_hint: int | None = None,
+) -> ReferentialSide | None:
+    """Measure the catalog once (``catalog_size_hint`` skips the count)
+    and build its side: at most ``BROADCAST_MAX_CATALOG_ROWS`` rows →
+    the row-local Arrow membership UDF (the wide scan never shuffles and
+    needs no exploded-refs pre-scan); above it → the salted anti-join,
+    its Bloom filter built here once when the catalog exceeds
+    ``BLOOM_MIN_CATALOG_ROWS``, so callers probing repeatedly (stream
+    micro-batches) never rebuild it. None without a catalog. The
+    thresholds are read per call."""
+    if catalog is None:
+        return None
+    n = catalog_size_hint if catalog_size_hint is not None else catalog.count()
+    if n <= BROADCAST_MAX_CATALOG_ROWS:
+        return ReferentialSide(
+            orphan_refs_rowlocal_udf(spark, collect_catalog_keys(catalog))
+        )
+    bloom = (
+        build_bloom(catalog, "media_ref", n)
+        if n > BLOOM_MIN_CATALOG_ROWS
+        else None
+    )
+    return ReferentialSide(None, catalog, n, bloom, salt_buckets)
+
+
+def orphan_rows(docs: DataFrame, side: ReferentialSide) -> DataFrame:
+    """The join side's per-row orphan aggregate: (doc_id, partition_id,
+    row_fp, orphan_refs sorted and distinct, n_orphans), one row per
+    physical document row with at least one orphan ref. ``row_fp`` keeps
+    duplicate doc_ids with differing spans apart, matching the
+    row-local UDF's per-row semantics exactly."""
+    return (
+        orphan_refs(
+            docs,
+            side.catalog,
+            docs.sparkSession,
+            catalog_size_hint=side.n_catalog,
+            salt_buckets=side.salt_buckets,
+            bloom=side.bloom,
+            row_fingerprint=True,
+        )
+        .groupBy("doc_id", "partition_id", "row_fp")
+        .agg(
+            F.sort_array(F.collect_set("media_ref")).alias("orphan_refs"),
+            F.count("*").alias("n_orphans"),
+        )
+    )

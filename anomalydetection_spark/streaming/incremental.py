@@ -11,9 +11,9 @@ task_scheduler.py:11-25) map directly onto Structured Streaming:
   batch-rounds shape the engine's manifest loop uses,
 - ``processingTime`` trigger = the 60 s poll cadence.
 
-Each micro-batch runs the same per-partition constraint checks as the
-batch pipeline (foreachBatch → plans.pipeline operators), appending
-verdicts + violations parquet. Cross-batch state (global uniqueness,
+Each micro-batch is judged by the batch pipeline's own pass core
+(foreachBatch → plans/pipeline.py::_validate_pass), writing verdicts +
+violations parquet per batch id. Cross-batch state (global uniqueness,
 drift history) stays in the manifest/violations tables — a micro-batch
 only asserts within-batch and against broadcast reference data, which
 is the right split at 10^12-doc scale (global re-checks run as periodic
@@ -23,15 +23,14 @@ batch passes over the violations/metrics tables).
 from __future__ import annotations
 
 import os
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import DEFAULT_CONFIG, ValidationConfig
-from ..operators import stats as stats_ops
-from ..operators.referential import orphan_refs
-from ..operators.uniqueness import duplicate_keys
+from ..operators.referential import ReferentialSide, referential_side
 from ..schema import DOCUMENTS_SCHEMA
 
 
@@ -52,130 +51,47 @@ def read_documents_stream(
 
 def _batch_verdicts(
     batch: DataFrame,
-    catalog: DataFrame | None,
-    catalog_size_hint: int | None = None,
-    bloom: tuple | None = None,
+    side: ReferentialSide | None,
+    cfg: ValidationConfig,
     baseline_hist: DataFrame | None = None,
-    orphan_udf=None,
-    max_violation_exemplars: int | None = None,
     violations_out: str | None = None,
-    cfg: ValidationConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
-    """Micro-batch validation via the SAME one-wide-scan violation
-    machinery and check table as the batch pipeline
-    (plans/pipeline.py::CHECKS, ``_all_violations``): conformance flags
-    row-local, uniqueness via broadcast dup-key join on
-    ``cfg.unique_key``, referential row-local (broadcastable catalog,
-    ``orphan_udf``) or salted-join aggregate (big catalog, optional
-    Bloom prefilter). Gates, histogram binning and drift thresholds
-    come from ``cfg`` exactly as in ``run_validation``.
+    """One micro-batch judged by ``run_validation``'s own pass core
+    (plans/pipeline.py::_validate_pass, with ``batch`` as both scope and
+    key scope): the same checks, ``cfg`` gates and exemplar cap,
+    broadcast ceilings, concurrent window and drift against
+    ``baseline_hist``. ``side`` is the stream's referential side, built
+    once per stream.
 
     ``violations_out``: optional per-batch directory; exact violation
     rows (optionally exemplar-capped) are written there with
-    mode=overwrite so a replayed micro-batch is idempotent, and verdict
-    counts are derived from the materialized output instead of
-    re-running the wide scan."""
-    from ..plans.pipeline import (
-        _CAP_HELPER_COLS,
-        CHECKS,
-        VERDICTS_DDL,
-        _all_violations,
-        _cap_violations,
-        _count_grid,
-        _grid_to_verdicts,
-    )
+    mode=overwrite so a replayed micro-batch is idempotent. The pass's
+    caches are released before returning, so no micro-batch leaves one
+    behind."""
+    from ..plans.pipeline import CHECKS, VERDICTS_DDL, _validate_pass
 
-    totals = batch.groupBy("partition_id").agg(F.count("*").alias("n_rows"))
-    dups = duplicate_keys(batch, cfg.unique_key, cfg.salt_buckets)
-    orphan_doc = None
-    if catalog is not None and orphan_udf is None:
-        # big catalog → salted anti-join pre-scan (Bloom prefilter and
-        # size hint measured/built once at stream setup: a micro-batch
-        # must not pay a catalog.count() or a bloom rebuild per
-        # trigger); row_fingerprint keeps the aggregate per-physical-row
-        orphans = orphan_refs(
-            batch,
-            catalog,
-            batch.sparkSession,
-            use_bloom=bloom is not None,
-            catalog_size_hint=catalog_size_hint,
-            bloom=bloom,
-            row_fingerprint=True,
-        )
-        orphan_doc = orphans.groupBy("doc_id", "partition_id", "row_fp").agg(
-            F.sort_array(F.collect_set("media_ref")).alias("orphan_refs"),
-            F.count("*").alias("n_orphans"),
-        )
-    violations = _all_violations(
-        batch, dups, orphan_doc, orphan_udf=orphan_udf,
-        unique_key=cfg.unique_key,
-    )
-    capped = max_violation_exemplars is not None
-    if capped:
-        # capped stream is bounded (≤K rows per check × partition) —
-        # cache it, write the exemplars in VIOLATIONS_SCHEMA shape
-        # (helper columns dropped), then take exact verdict counts
-        # from the stamped window aggregates
-        violations = _cap_violations(
-            violations, max_violation_exemplars
-        ).cache()
-        if violations_out is not None:
-            # deterministic per-batch path + overwrite = idempotent on
-            # micro-batch replay (foreachBatch may re-run a batch id
-            # after failure; append would double the rows)
-            violations.drop(*_CAP_HELPER_COLS).write.mode(
-                "overwrite"
-            ).parquet(violations_out)
-    elif violations_out is not None:
-        violations.write.mode("overwrite").parquet(violations_out)
-        violations = batch.sparkSession.read.parquet(violations_out)
-    # verdict cardinality is partitions × checks — metadata scale:
-    # judged on the driver exactly as in run_validation
-    grid = _count_grid(violations, capped)
-    if capped:
-        violations.unpersist()
-    rows = _grid_to_verdicts(
-        grid,
-        {r.partition_id: r.n_rows for r in totals.collect()},
-        catalog is not None,
+    p = _validate_pass(
+        batch.sparkSession,
+        batch,
+        lambda: side,
         cfg,
+        baseline_hist=baseline_hist,
+        sink=violations_out,
     )
+    for df in p.held:
+        df.unpersist()
     # a micro-batch only asserts WITHIN-batch uniqueness (cross-batch
-    # dup detection is the periodic batch pass over the manifest) —
-    # keep the check name honest about that scope
-    within_batch = {c.name for c in CHECKS if c.family == "uniqueness"}
-    rows = [
-        (f"{r[0]}_batch" if r[0] in within_batch else r[0], *r[1:])
-        for r in rows
+    # dup detection is the periodic batch pass over the manifest), and
+    # its drift compares one batch's histogram — keep the check names
+    # honest about that scope
+    renames = {
+        c.name: f"{c.name}_batch" for c in CHECKS if c.family == "uniqueness"
+    }
+    rows = [(renames.get(r[0], r[0]), *r[1:]) for r in p.part_verdicts]
+    rows += [
+        (r[0].replace("drift_len", "drift_len_batch", 1), *r[1:])
+        for r in p.table_rows
     ]
-    if baseline_hist is not None:
-        # distribution drift per micro-batch against the STORED
-        # baseline: the batch reduces to a bounded (kind x bucket)
-        # histogram before the one keyed shuffle, so the per-trigger
-        # cost is a map-side partial agg + a histogram-sized plan
-        # regardless of batch size
-        from ..operators import drift as drift_ops
-
-        # the batch histogram MUST use the same binning the stored
-        # baseline was built with — a 64-bin batch against a 128-bin
-        # baseline zero-fills half the buckets and fires phantom drift
-        d = cfg.drift
-        rows += [
-            tuple(r)
-            for r in drift_ops.drift_verdicts(
-                stats_ops.length_histogram(
-                    batch, bins=d.histogram_bins,
-                    bin_width=d.histogram_bin_width,
-                ),
-                baseline_hist,
-                keys=["kind"],
-                psi_threshold=d.psi_threshold_global,
-                ks_threshold=d.ks_threshold_global,
-                check_prefix="drift_len_batch",
-                chi2_threshold=d.chi2_threshold_global,
-                jsd_threshold=d.jsd_threshold_global,
-            ).collect()
-        ]
     return batch.sparkSession.createDataFrame(rows, schema=VERDICTS_DDL)
 
 
@@ -207,8 +123,13 @@ def stream_validate(
     window aggregates stamped by the capping pass (same trade-off as the
     batch pipeline's ``ValidationConfig.max_violation_exemplars``).
 
-    ``cfg``: the checks' rate gates, uniqueness key, histogram binning
-    and drift thresholds — the same fields ``run_validation`` reads.
+    ``catalog``: measured once when the stream starts
+    (operators/referential.py::referential_side); every micro-batch
+    reuses that referential side.
+
+    ``cfg``: the checks' rate gates, uniqueness key, salting, histogram
+    binning and drift thresholds — the same fields ``run_validation``
+    reads (the exemplar cap is ``max_violation_exemplars``).
 
     ``contract``: a :class:`~..operators.contract.Contract` — judged per
     micro-batch via the SAME two-tier ``contract_verdicts`` as batch
@@ -222,54 +143,30 @@ def stream_validate(
     ``schema``: optional stream schema override (see
     :func:`read_documents_stream`) for document tables carrying extra
     payload columns a contract wants to judge."""
-    from ..functions.bloom import build_bloom
-    from ..operators.referential import (
-        BLOOM_MIN_CATALOG_ROWS,
-        BROADCAST_MAX_CATALOG_ROWS,
-        collect_catalog_keys,
-        orphan_refs_rowlocal_udf,
-    )
-
     stream = read_documents_stream(spark, input_dir, schema=schema)
     verdicts_dir = os.path.join(output_dir, "verdicts")
     violations_dir = os.path.join(output_dir, "violations")
     contract_dir = os.path.join(output_dir, "contract_verdicts")
     if contract is not None:
         from ..operators.contract import contract_verdicts
-    catalog_n = catalog.count() if catalog is not None else None
-    # referential machinery built ONCE for the stream's lifetime (a
-    # micro-batch must never re-scan the catalog):
-    # * broadcastable catalog → key set collected + broadcast once, the
-    #   check is a row-local Arrow membership UDF inside the wide scan
-    # * big catalog → Bloom prefilter built once; the per-batch path is
-    #   the salted anti-join with the bloom as a pre-filter
-    orphan_udf = None
-    bloom = None
-    if catalog is not None:
-        if catalog_n <= BROADCAST_MAX_CATALOG_ROWS:
-            orphan_udf = orphan_refs_rowlocal_udf(
-                spark, collect_catalog_keys(catalog)
-            )
-        elif catalog_n > BLOOM_MIN_CATALOG_ROWS:
-            bloom = build_bloom(catalog, "media_ref", catalog_n)
+    # built ONCE for the stream's lifetime: a micro-batch never counts
+    # or collects the catalog, nor rebuilds its Bloom filter
+    side = referential_side(spark, catalog, cfg.salt_buckets)
+    cfg = replace(cfg, max_violation_exemplars=max_violation_exemplars)
 
     def process(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
         v = _batch_verdicts(
             batch,
-            catalog,
-            catalog_n,
-            bloom,
+            side,
+            cfg,
             baseline_hist,
-            orphan_udf=orphan_udf,
-            max_violation_exemplars=max_violation_exemplars,
             violations_out=(
                 os.path.join(violations_dir, f"batch_id={batch_id}")
                 if emit_violations
                 else None
             ),
-            cfg=cfg,
         )
         # per-batch_id dir + overwrite = idempotent on micro-batch
         # replay, same as the violations sink below and the windowed

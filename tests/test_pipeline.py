@@ -292,6 +292,28 @@ def test_staged_violations_published(spark, docs, catalog, tmp_path):
     assert res.violations.count() > 0
 
 
+def test_capped_staged_violations_keep_violations_schema(
+    spark, docs, catalog, tmp_path
+):
+    """A capped pass with ``violations_dir`` stages exactly the
+    VIOLATIONS_SCHEMA columns: the ``__cnt_*`` counts the capped
+    verdicts are judged from never reach the staged files."""
+    import dataclasses
+
+    from anomalydetection_spark.config import DEFAULT_CONFIG
+    from anomalydetection_spark.schema import VIOLATIONS_SCHEMA
+
+    vdir = str(tmp_path / "violations")
+    res = run_validation(
+        spark, docs, catalog=catalog, violations_dir=vdir, run_id="c1",
+        cfg=dataclasses.replace(DEFAULT_CONFIG, max_violation_exemplars=1),
+    )
+    staged = spark.read.parquet(f"{vdir}/_staged_c1")
+    assert staged.columns == VIOLATIONS_SCHEMA.fieldNames()
+    assert res.violations.columns == VIOLATIONS_SCHEMA.fieldNames()
+    assert staged.count() == res.violations.count() > 0
+
+
 def test_rowlocal_and_join_referential_paths_agree(spark, docs, catalog):
     """The shuffle-free row-local referential path (broadcastable
     catalog → Arrow membership UDF inside the wide scan) and the

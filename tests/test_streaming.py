@@ -271,6 +271,100 @@ def test_stream_violations_sink_and_exemplar_cap(spark, docs, catalog, tmp_path)
     assert verdict_counts(out_cap) == verdict_counts(out_full)
 
 
+def _sink_rows(spark, out_dir, sink):
+    """A stream sink's rows as a sorted list of reprs (spans as JSON)."""
+    df = spark.read.parquet(os.path.join(out_dir, sink))
+    if "spans" in df.columns:
+        df = df.withColumn("spans", F.to_json("spans"))
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+def test_stream_join_referential_path_matches_rowlocal(
+    spark, docs, catalog, tmp_path, monkeypatch
+):
+    """With the catalog above the broadcast ceiling (salted anti-join
+    side) and the orphan and dup-key sides above theirs, a stream
+    judges and emits exactly what the default row-local stream does
+    over the same backlog."""
+    from anomalydetection_spark.operators import referential
+    from anomalydetection_spark.plans import pipeline
+
+    inp = str(tmp_path / "in")
+    _write_batch(spark, docs, inp, 0, 8)
+
+    def drain(name):
+        out = str(tmp_path / name)
+        stream_validate(
+            spark, inp, out, str(tmp_path / f"ck_{name}"),
+            catalog=catalog, emit_violations=True,
+        ).awaitTermination()
+        return [_sink_rows(spark, out, s) for s in ("verdicts", "violations")]
+
+    rowlocal = drain("rowlocal")
+    monkeypatch.setattr(referential, "BROADCAST_MAX_CATALOG_ROWS", 10)
+    monkeypatch.setattr(pipeline, "BROADCAST_MAX_ROWS", 0)
+    assert referential.referential_side(spark, catalog).rowlocal_udf is None
+    joined = drain("joined")
+    assert rowlocal[0] and rowlocal[1]
+    assert joined == rowlocal
+
+
+def test_stream_microbatch_judged_like_run_validation(
+    spark, docs, catalog, tmp_path
+):
+    """A backlog drained as ONE micro-batch gets, after the stream's
+    two renames (uniqueness_batch, drift_len_batch), the per-partition
+    and drift verdict rows run_validation gives on the same docs —
+    uncapped and exemplar-capped — and the drain leaves no cached RDD
+    behind."""
+    import dataclasses
+
+    from anomalydetection_spark.config import DEFAULT_CONFIG
+    from anomalydetection_spark.operators.stats import length_histogram
+    from anomalydetection_spark.plans.pipeline import run_validation
+
+    inp = str(tmp_path / "in")
+    docs.coalesce(1).write.parquet(inp)  # one file -> one micro-batch
+    baseline = length_histogram(docs.filter(F.col("partition_id") < 2))
+    cols = ["check", "partition_id", "n_rows", "n_violations",
+            "violation_rate", "score", "verdict"]
+
+    def norm(rows):
+        return sorted(
+            repr(tuple(round(v, 9) if isinstance(v, float) else v for v in r))
+            for r in rows
+            if r.partition_id is not None or r.check.startswith("drift_len")
+        )
+
+    def persisted():
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    for name, k in (("uncapped", None), ("capped", 2)):
+        out = str(tmp_path / name)
+        before = persisted()
+        stream_validate(
+            spark, inp, out, str(tmp_path / f"ck_{name}"), catalog=catalog,
+            baseline_hist=baseline, emit_violations=k is not None,
+            max_violation_exemplars=k,
+        ).awaitTermination()
+        assert persisted() == before, name
+        streamed = spark.read.parquet(os.path.join(out, "verdicts"))
+        assert streamed.select("batch_id").distinct().count() == 1
+        streamed = streamed.select(
+            F.regexp_replace(
+                F.regexp_replace("check", "^uniqueness_batch$", "uniqueness"),
+                "^drift_len_batch", "drift_len",
+            ).alias("check"),
+            *cols[1:],
+        ).collect()
+        cfg = dataclasses.replace(DEFAULT_CONFIG, max_violation_exemplars=k)
+        batch = run_validation(
+            spark, docs, catalog=catalog, baseline_hist=baseline, cfg=cfg
+        ).verdicts.select(*cols).collect()
+        assert any(r.check.startswith("drift_len") for r in batch)
+        assert norm(streamed) == norm(batch), name
+
+
 def test_windowed_event_time_drift_watermark_bounds_late_rows(
     spark, tmp_path
 ):

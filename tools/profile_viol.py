@@ -1,5 +1,7 @@
 """Micro-profile the wide violations stage's components at one core
-count: pure spans scan, conformance flags only, full _all_violations,
+count: pure spans scan, conformance flags only, the referential side
+(operators/referential.py::referential_side, plus the per-row orphan
+aggregate when the catalog takes the join path), full _all_violations,
 and the verdicts judged from the per-partition count grid.
 
     python tools/profile_viol.py <ncores> [n_docs]
@@ -19,6 +21,7 @@ from pyspark.sql import functions as F
 def main() -> None:
     ncores = int(sys.argv[1])
     from bench import N_DOCS_BENCH, _fresh_spark, _materialize_bench_tables
+    from anomalydetection_spark.operators import referential as ref_ops
     from anomalydetection_spark.plans import pipeline as P
 
     n_docs = int(sys.argv[2]) if len(sys.argv) > 2 else N_DOCS_BENCH
@@ -44,18 +47,20 @@ def main() -> None:
     clock("conformance_only", lambda: P._all_violations(
         docs, dups, None, True).filter(
         F.col("check").isin("conformance")).count())
-    orphans = P.orphan_refs(docs, catalog, spark, salt_buckets=8,
-                            row_fingerprint=True)
-    orphan_doc = (
-        orphans.groupBy("doc_id", "partition_id", "row_fp")
-        .agg(F.sort_array(F.collect_set("media_ref")).alias("orphan_refs"),
-             F.count("*").alias("n_orphans")).cache())
-    clock("orphan_count", orphan_doc.count)
-    n_orph = orphan_doc.count()
-    bc = n_orph <= P.BROADCAST_MAX_ROWS
-    t["n_orphan_docs"] = n_orph
+    # the referential side the pass would attach: row-local UDF for a
+    # broadcastable catalog, else the per-row orphan aggregate by join
+    side = clock("referential_side", lambda: ref_ops.referential_side(
+        spark, catalog, salt_buckets=8))
+    orphan_doc, bc = None, True
+    if side.rowlocal_udf is None:
+        orphan_doc = ref_ops.orphan_rows(docs, side).cache()
+        n_orph = clock("orphan_count", orphan_doc.count)
+        bc = n_orph <= P.BROADCAST_MAX_ROWS
+        t["n_orphan_docs"] = n_orph
+    t["referential_path"] = "join" if orphan_doc is not None else "rowlocal"
     t["broadcast_orphans"] = bc
-    viol = P._all_violations(docs, dups, orphan_doc, bc).cache()
+    viol = P._all_violations(docs, dups, orphan_doc, bc,
+                             orphan_udf=side.rowlocal_udf).cache()
     clock("all_violations_count", viol.count)
     totals = {
         r.partition_id: r.n_rows
